@@ -2,19 +2,23 @@
 
 This is a from-scratch re-derivation of the reference's scalar
 pipeline (reference: html_parser.py:366-639) on the pure-stdlib DOM
-of :mod:`.dom`.  Stage structure (SURVEY.md §3.1):
+of :mod:`.dom`.  The reference's stages (SURVEY.md §3.1) run as two
+tree walks for every config:
 
 1. root selection at ``start_parsing_at_tag`` (default ``body``) and
    re-wrap under a synthetic ``html`` marked for span removal
    (reference: html_parser.py:429-443),
-2. minification — comment removal + whitespace collapse, ``<pre>``
-   exempt (reference: html_parser.py:446),
-3. tree rewriting: consecutive-tag folding (html_parser.py:267-313),
-   top-down then bottom-up subtree removal with tail-preserving
-   deletion (html_parser.py:222-264,316-363,583-607),
-4. DFS linearization with the block/inline whitespace state machine
-   (html_parser.py:496-581),
-5. relative-position renumbering (html_parser.py:474-494).
+2. one rewrite walk (``_Extractor._rewrite``) doing minification —
+   comment removal + whitespace collapse, ``<pre>`` exempt
+   (html_parser.py:446) — and tree rewriting: consecutive-tag folding
+   (html_parser.py:267-313), top-down then bottom-up subtree removal
+   with tail-preserving deletion (html_parser.py:222-264,316-363,
+   583-607); a config with nothing to rewrite only minifies,
+3. one DFS linearization (``_Extractor._linearize``) with the
+   block/inline whitespace state machine (html_parser.py:496-581)
+   that numbers relative positions and offsets as it goes
+   (html_parser.py:474-494); spans a length-dependent alone-rule
+   drops are removed after the walk (``_drop_by_length``).
 
 Divergences from the reference (deliberate, documented):
 
@@ -29,10 +33,11 @@ Divergences from the reference (deliberate, documented):
 from __future__ import annotations
 
 import sys
+from bisect import bisect_left
 from collections import defaultdict
 from dataclasses import dataclass
 
-from .config import ExtractionConfig, TagToRemove, TagToRemoveWithContent
+from .config import INF, ExtractionConfig, TagToRemove
 from .constants import (
     BLOCK_CONTENT_SEPARATOR,
     BLOCK_ELEMENTS,
@@ -46,7 +51,7 @@ from .constants import (
     PRESERVE_WHITESPACE_TAGS,
 )
 from .dom import COMMENT_TAG, Node, parse_document
-from .minify import _collapse, minify_tree
+from .minify import _collapse, _minify
 
 _FAKE_TAGS = (FAKE_TAG_BLOCK, FAKE_TAG_INLINE, FAKE_TAG_BASIC)
 # shared empty attrs/attr_values for attribute-less nodes (never
@@ -102,6 +107,16 @@ class AttributeCleaner:
         return names, [attrib[k] for k in names]
 
 
+# per-tag subtree decisions of TagFilter.decide_*: KEEP and DROP are
+# final, TEXT means the verdict depends on the subtree text length
+_KEEP, _DROP, _TEXT = 0, 1, 2
+
+
+def _trivial_bounds(rule) -> bool:
+    """A rule whose bounds [<=0, inf] admit every length n >= 0."""
+    return rule.content_min_char_length <= 0 and rule.content_max_char_length == INF
+
+
 class TagFilter:
     """Span-drop and subtree-drop predicates (reference: html_parser.py:152-264)."""
 
@@ -122,35 +137,27 @@ class TagFilter:
                     f"invalid removal method {t.method!r} for tag {t.tag!r}; "
                     "valid methods are 'top-down' and 'bottom-up'"
                 )
-        self._td_memo: dict = {}
-        self._bu_memo: dict = {}
-        self._alone_drop_set: frozenset | None = None
 
     def finalize(self) -> None:
-        """Precompute the tag-only span-drop fast path.  Valid when the
-        drop decision cannot depend on span length: every alone-rule
-        has trivial bounds [<=0, inf] (always true for n>=0) and the
-        global alone threshold is disabled (max = -inf never admits
-        any n).  All NAMED_CONFIGS qualify.  Must be called after the
-        last alone-rule registration (the synthetic ``html`` wrapper
-        rule — see _Extractor.__init__)."""
-        inf = float("inf")
-        if self.txt_max_chr_len_alone == -inf and all(
-            r.content_min_char_length <= 0 and r.content_max_char_length == inf
-            for r in self.tags_to_remove_alone.values()
-        ):
-            self._alone_drop_set = frozenset(self.tags_to_remove_alone)
-        else:
-            self._alone_drop_set = None
+        """Split the alone-rules once the last one is registered (the
+        synthetic ``html`` wrapper rule — see _Extractor.__init__).
+
+        ``always_drop``: tags whose rule has trivial bounds — their
+        spans drop whatever their length, so the linearizer never
+        emits them.  ``length_rules``: whether any other span can drop,
+        i.e. some rule has non-trivial bounds or the global alone
+        threshold is enabled (max = -inf never admits any n).  False
+        for all NAMED_CONFIGS."""
+        rules = self.tags_to_remove_alone
+        self.always_drop = frozenset(t for t, r in rules.items() if _trivial_bounds(r))
+        self.length_rules = (
+            len(self.always_drop) < len(rules) or self.txt_max_chr_len_alone > -INF
+        )
 
     def drop_span(self, span: Span) -> bool:
         # reference: html_parser.py:195-220
         tag = span.value
-        n = (
-            span.char_end_idx - span.char_start_idx
-            if span.char_end_idx is not None
-            else 0
-        )
+        n = span.char_end_idx - span.char_start_idx
         rule = self.tags_to_remove_alone.get(tag)
         if rule is not None and rule.content_min_char_length <= n <= rule.content_max_char_length:
             return True
@@ -179,49 +186,32 @@ class TagFilter:
             return False
         return rule.content_min_char_length <= len(text) <= rule.content_max_char_length
 
-    # -- lazy-text fast paths ------------------------------------------------
     # The reference serializes the whole subtree to text at EVERY node
     # just to measure its length (html_parser.py:590-593,602-605) — an
-    # O(size × depth) cost per document.  When the decision doesn't
-    # actually depend on the length (rule bounds are [0, inf], or no
-    # rule and global thresholds disabled — the production configs),
-    # the text is never needed.  decide_* returns (verdict, needs_text);
-    # when needs_text is True the caller re-asks with the real text.
+    # O(size × depth) cost per document.  Most decisions do not depend
+    # on the length (rule bounds are [0, inf], or no rule and the
+    # global threshold disabled — the production configs); decide_*
+    # says so per tag, and only _TEXT makes the caller build the text
+    # and ask drop_subtree_* for the verdict.
 
-    def decide_top_down(self, tag: str) -> tuple[bool, bool]:
-        r = self._td_memo.get(tag)
-        if r is None:
-            r = self._td_memo[tag] = self._decide_top_down_uncached(tag)
-        return r
-
-    def _decide_top_down_uncached(self, tag: str) -> tuple[bool, bool]:
+    def decide_top_down(self, tag: str) -> int:
         rule = self.tags_to_remove_with_content.get(tag)
-        if rule is not None and rule.method != "top-down":
-            return False, False
         if rule is not None:
-            if rule.content_min_char_length <= 0 and rule.content_max_char_length == float("inf"):
-                return True, False
-            return False, True  # non-trivial bounds → need the text
+            if rule.method != "top-down":
+                return _KEEP
+            return _DROP if _trivial_bounds(rule) else _TEXT
         if (
             tag not in self.tags_exceptions_with_content
-            and self.txt_max_chr_len_with_content > -float("inf")
+            and self.txt_max_chr_len_with_content > -INF
         ):
-            return False, True  # global threshold enabled → need text
-        return False, False
+            return _TEXT
+        return _KEEP
 
-    def decide_bottom_up(self, tag: str) -> tuple[bool, bool]:
-        r = self._bu_memo.get(tag)
-        if r is None:
-            r = self._bu_memo[tag] = self._decide_bottom_up_uncached(tag)
-        return r
-
-    def _decide_bottom_up_uncached(self, tag: str) -> tuple[bool, bool]:
+    def decide_bottom_up(self, tag: str) -> int:
         rule = self.tags_to_remove_with_content.get(tag)
         if rule is None or rule.method != "bottom-up":
-            return False, False
-        if rule.content_min_char_length <= 0 and rule.content_max_char_length == float("inf"):
-            return True, False
-        return False, True
+            return _KEEP
+        return _DROP if _trivial_bounds(rule) else _TEXT
 
 
 class ConsecutiveTagFolder:
@@ -315,53 +305,6 @@ def _splice_tail_on_removal(node: Node, kept_siblings: list, parent: Node) -> No
             parent.text = parent.text + node.tail
 
 
-def _splice_tail_before_delete(node: Node) -> None:
-    """In-tree variant of the splice (kept for remove_keeping_tail's
-    public form; reference: html_parser.py:316-363)."""
-    if not node.tail:
-        return
-    sep = PLAIN_TEXT_SEPARATOR
-    previous = node.getprevious()
-    if previous is not None:
-        if previous.tail is None:
-            previous.tail = node.tail
-        elif (
-            previous.text
-            and not previous.text.endswith(sep)
-            and not node.tail.startswith(sep)
-        ):
-            previous.text = previous.text + sep + node.tail
-        elif (
-            previous.text
-            and previous.text.endswith(sep)
-            and node.tail.startswith(sep)
-        ):
-            previous.text = previous.text[: -len(sep)] + node.tail
-        elif (
-            previous.tail
-            and not previous.tail.endswith(sep)
-            and not node.tail.startswith(sep)
-        ):
-            previous.tail = previous.tail + sep + node.tail
-        else:
-            previous.tail = previous.tail + node.tail
-    else:
-        parent = node.getparent()
-        if parent.text is None:
-            parent.text = node.tail
-        elif not parent.text.endswith(sep) and not node.tail.startswith(sep):
-            parent.text = parent.text + sep + node.tail
-        elif parent.text.endswith(sep) and node.tail.startswith(sep):
-            parent.text = parent.text[: -len(sep)] + node.tail
-        else:
-            parent.text = parent.text + node.tail
-
-
-def remove_keeping_tail(node: Node) -> None:
-    _splice_tail_before_delete(node)
-    node.getparent().remove(node)
-
-
 def _text_and_link_chars(node: Node) -> tuple[int, int]:
     """(all text chars, text chars under ``<a>`` descendants) of the
     subtree rooted at ``node`` — the two numbers link-density scoring
@@ -399,33 +342,27 @@ class _Extractor:
         self.attr_cleaner = AttributeCleaner(cfg.attrs_to_keep)
         self.tag_filter = TagFilter(cfg, alone)
         # the synthetic <html> wrapper's span-drop rule (reference:
-        # html_parser.py:437-443) is registered up-front so the
-        # tag-only drop fast path can be finalized once; run() no
-        # longer mutates the rule table per document (the extractor is
-        # reusable across documents — see make_extract_fn)
+        # html_parser.py:437-443) is registered up-front so the rule
+        # split is finalized once; run() never mutates the rule table
+        # (the extractor is reusable across documents — see
+        # make_extract_fn)
         if cfg.start_parsing_at_tag is not None:
             self.tag_filter.tags_to_remove_alone["html"] = TagToRemove("html")
         self.tag_filter.finalize()
-        # per-tag separator action memo for _add_text (1 dict lookup
-        # instead of up to 2 frozenset probes per node event)
+        self._drop_set = self.tag_filter.always_drop
+        # the whole rewrite pass is a no-op when the config has no
+        # fold tags, no with-content rules and no global thresholds
+        # (keep_everything): run() then only minifies
+        self._rewrites = bool(
+            self.folder.fold_tags
+            or self.tag_filter.tags_to_remove_with_content
+            or self.tag_filter.txt_max_chr_len_with_content > -INF
+        )
+        # per-tag memos: separator action for the linearizer, rewrite
+        # decision for the rewrite walk (see _decide)
         self._sep_act: dict = {}
         self._tag_decide: dict = {}
         self._br_newline = cfg.convert_br_tag_to_breaking_line
-        # the minify pass can fuse into the rewrite walk only when NO
-        # subtree-removal decision reads the subtree text (descendants
-        # are not yet minified when a fused top-down decision fires):
-        # every with-content rule has trivial bounds and the global
-        # with-content threshold is disabled — true for all
-        # NAMED_CONFIGS
-        inf = float("inf")
-        self._fused_rewrite_ok = (
-            self.tag_filter.txt_max_chr_len_with_content == -inf
-            and all(
-                t.content_min_char_length <= 0
-                and t.content_max_char_length == inf
-                for t in self.tag_filter.tags_to_remove_with_content.values()
-            )
-        )
         self.density_cfg = cfg.density_prune
         self.density_tags = (
             frozenset(cfg.density_prune.candidate_tags)
@@ -433,99 +370,51 @@ class _Extractor:
             else frozenset()
         )
 
-    # ---- tree rewriting (reference: html_parser.py:583-607) ---------------
+    # ---- tree rewriting (reference: html_parser.py:446,583-607) -----------
+    def _decide(self, tag: str):
+        """Memoized rewrite decision for ``tag``: 0 when the walk has
+        nothing to decide there (most tags — one truthiness test per
+        node), else ``(top-down, bottom-up, density candidate)``."""
+        tf = self.tag_filter
+        d = (tf.decide_top_down(tag), tf.decide_bottom_up(tag), tag in self.density_tags)
+        d = self._tag_decide[tag] = d if any(d) else 0
+        return d
+
     # Parent-managed deletion: a node signals "remove me" via return
     # value and the parent splices its tail and rebuilds the child
     # list once — identical observable semantics to the reference's
     # self-removal (lxml child iterators pre-fetch the next sibling,
     # so a child removing itself never skips its successor), but O(1)
     # per removal instead of list.remove's O(children) identity scan.
-    def _clean_tree(self, root: Node) -> bool:
-        # both fold branches require exactly one child — skip the call
-        # (and its own re-checks) for every other node
-        if len(root.children) == 1:
-            self.folder(root)
+    def _rewrite(self, root: Node, in_pre: bool) -> bool:
+        """Minify and rewrite in ONE walk: each node is minified
+        locally, then folded, then judged top-down, then its children
+        are walked, then it is judged bottom-up and by density.  Returns
+        True when ``root`` must be removed.  Subtrees dropped top-down
+        on their tag alone are never minified (script/style/header/
+        footer/form bodies under boilerplate_strip).
 
-        tag = root.tag
-        # one memoized 4-tuple per tag instead of two dict probes per
-        # node (decisions are pure functions of the tag — TagFilter
-        # decide_* docstrings)
-        d = self._tag_decide.get(tag)
-        if d is None:
-            d = self._tag_decide[tag] = (
-                *self.tag_filter.decide_top_down(tag),
-                *self.tag_filter.decide_bottom_up(tag),
-            )
-        drop, needs_text = d[0], d[1]
-        if needs_text:
-            drop = self.tag_filter.drop_subtree_top_down(tag, root.subtree_text())
-        if drop:
-            return True
-
-        if root.children:
-            kept: list[Node] = []
-            changed = False
-            for child in root.children:
-                if self._clean_tree(child):
-                    _splice_tail_on_removal(child, kept, root)
-                    changed = True
-                else:
-                    kept.append(child)
-            if changed:
-                root.children = kept
-
-        drop, needs_text = d[2], d[3]
-        if needs_text:
-            drop = self.tag_filter.drop_subtree_bottom_up(tag, root.subtree_text())
-        if drop:
-            return True
-
-        # text/link-density scoring (north-star heuristic; config.py
-        # DensityPruneConfig).  Scored AFTER the children pass on
-        # purpose: tag-rule removals (script/style/…) and inner
-        # density prunes have already been applied, so a nav bar
-        # padded with a 300-char <script> is judged on its links
-        # alone, not diluted by code that is about to be deleted
-        # anyway.  Pruning still removes the whole (cleaned) subtree
-        # with the same tail-preserving splice.  Cost is one walk of
-        # the cleaned subtree per candidate — O(depth × size) worst
-        # case on nested-div chains, O(size) on typical trees.
-        if self.density_cfg is not None and root.tag in self.density_tags:
-            n_text, n_link = _text_and_link_chars(root)
-            dp = self.density_cfg
-            if (n_text > 0 and n_link / n_text >= dp.max_link_density) or (
-                n_text < dp.min_text_length and n_link > 0
-            ):
-                return True
-        return False
-
-    def _minify_clean_tree(self, root: Node, in_pre: bool) -> bool:
-        """Fused minify + rewrite pass: ONE traversal instead of
-        minify_tree's walk followed by _clean_tree's, and subtrees
-        dropped top-down are never minified at all (their contents are
-        about to be deleted — script/style/header/footer/form bodies
-        under boilerplate_strip).
-
-        Validity (``_fused_rewrite_ok``): every subtree-removal
-        decision must be text-free, because descendants are not yet
-        minified when this node's top-down decision fires.  Ordering
-        equivalence with minify-then-clean for the remaining steps:
+        The output equals the reference's order — minify the whole
+        tree, then rewrite it:
 
         * comment-strip/collapse are node-local, and a comment tail
           always merges into its neighbour raw, before that
           neighbour's own visit collapses it;
         * the fold rewriter reads only tags/attribs (minify-independent);
+        * a top-down verdict that reads the subtree text first minifies
+          the subtree below (``_minify`` is idempotent, so the child
+          visits that follow change nothing more); a bottom-up verdict
+          reads it after the children pass, when it is already minified;
         * a removed child's tail was collapsed at the child's own
           entry (the minify-local step runs before the drop verdict),
           and splice targets (previous kept sibling's tail / this
           node's text) were collapsed at their visits — so every
-          splice concatenates exactly the strings the unfused order
+          splice concatenates exactly the strings the two-pass order
           concatenates;
         * inside preserved (``<pre>``) subtrees nothing collapses but
-          comments still strip and rewrite rules still apply, exactly
-          as in the unfused order;
+          comments still strip and rewrite rules still apply;
         * the density score runs post-children over the cleaned,
-          minified subtree, as before.
+          minified subtree.
         """
         kids = root.children
         if kids:
@@ -560,18 +449,21 @@ class _Extractor:
         tag = root.tag
         d = self._tag_decide.get(tag)
         if d is None:
-            d = self._tag_decide[tag] = (
-                *self.tag_filter.decide_top_down(tag),
-                *self.tag_filter.decide_bottom_up(tag),
-            )
-        if d[0]:  # d[1]/d[3] are always False under _fused_rewrite_ok
-            return True
+            d = self._decide(tag)
+        if d:
+            drop = d[0]
+            if drop == _TEXT:
+                for child in kids:
+                    _minify(child, in_pre)
+                drop = self.tag_filter.drop_subtree_top_down(tag, root.subtree_text())
+            if drop:
+                return True
 
         if kids:
             kept: list[Node] = []
             changed = False
             for child in kids:
-                if self._minify_clean_tree(child, in_pre):
+                if self._rewrite(child, in_pre):
                     _splice_tail_on_removal(child, kept, root)
                     changed = True
                 else:
@@ -579,23 +471,35 @@ class _Extractor:
             if changed:
                 root.children = kept
 
-        if d[2]:
-            return True
-
-        if self.density_cfg is not None and tag in self.density_tags:
-            n_text, n_link = _text_and_link_chars(root)
-            dp = self.density_cfg
-            if (n_text > 0 and n_link / n_text >= dp.max_link_density) or (
-                n_text < dp.min_text_length and n_link > 0
-            ):
+        if d:
+            drop = d[1]
+            if drop == _TEXT:
+                drop = self.tag_filter.drop_subtree_bottom_up(tag, root.subtree_text())
+            if drop:
                 return True
+            # text/link-density scoring (north-star heuristic; config.py
+            # DensityPruneConfig).  Scored AFTER the children pass on
+            # purpose: tag-rule removals (script/style/…) and inner
+            # density prunes have already been applied, so a nav bar
+            # padded with a 300-char <script> is judged on its links
+            # alone, not diluted by code that is about to be deleted
+            # anyway.  Cost is one walk of the cleaned subtree per
+            # candidate — O(depth × size) worst case on nested-div
+            # chains, O(size) on typical trees.
+            if d[2]:
+                n_text, n_link = _text_and_link_chars(root)
+                dp = self.density_cfg
+                if (n_text > 0 and n_link / n_text >= dp.max_link_density) or (
+                    n_text < dp.min_text_length and n_link > 0
+                ):
+                    return True
         return False
 
     # ---- linearization (reference: html_parser.py:496-581) ----------------
     # The text accumulator is a chunk list with (length, last-char)
     # tracked incrementally: the reference's `sb[:-1] + sep` /
     # `self.text += ...` string ops copy the whole buffer and turn a
-    # 1 MB document into O(n\u00b2) character traffic.  Semantics are
+    # 1 MB document into O(n²) character traffic.  Semantics are
     # bit-identical: the whitespace machine's per-char loop reduces to
     # "collapse each \\s run to its first char; drop a leading run when
     # the buffer already ends in whitespace (or is empty)", and
@@ -646,68 +550,18 @@ class _Extractor:
         ):
             self._buf_append(PLAIN_TEXT_SEPARATOR)
 
-    def _add_text(self, tag: str, new_text) -> None:
-        act = self._sep_act.get(tag)
-        if act is None:
-            act = self._sep_act[tag] = (
-                1 if tag in self.block_elements_set
-                else 2 if tag in _INLINE_SET
-                else 0
-            )
-        if act == 1:
-            self._append_block_separator()
-        elif act == 2:
-            self._append_inline_separator()
-        if new_text:
-            self._append_text_content(new_text)
-        self._char_idx = self._len
-
     def _linearize(self, root: Node) -> None:
-        self.current_tag = root.tag
-
-        attrs, values = self.attr_cleaner(root.attrib)
-        span = Span(
-            char_start_idx=self._char_idx,
-            relative_start_pos=self._pos_counter[self._char_idx],
-            value=root.tag,
-            attrs=attrs,
-            attr_values=values,
-            kind="media" if root.tag in MEDIA_TAGS else "text",
-            media_ref=root.attrib.get("src", "") if root.tag in MEDIA_TAGS else "",
-        )
-        self._pos_counter[self._char_idx] += 1
-
-        if self.cfg.convert_br_tag_to_breaking_line and root.tag == "br":
-            self._buf_append("\n")  # reference: html_parser.py:470-472
-
-        self._add_text(root.tag, root.text)
-        for child in root.children:
-            self._linearize(child)
-        self.current_tag = root.tag
-
-        span.char_end_idx = self._char_idx
-        span.relative_end_pos = self._pos_counter[self._char_idx]
-        self._pos_counter[self._char_idx] += 1
-
-        self._add_text(root.tag, root.tail)
-
-        if not self.tag_filter.drop_span(span):
-            self.spans.append(span)
-
-    def _linearize_fast(self, root: Node) -> None:
-        """``_linearize`` specialized for tag-only span dropping
-        (``TagFilter._alone_drop_set`` is not None — true for all
-        NAMED_CONFIGS, where every alone-rule has trivial bounds and
-        the global alone threshold is disabled).
+        """DFS linearization with relative positions and offsets
+        numbered inline.
 
         ``_char_idx`` is nondecreasing over the DFS, so span events
-        already occur ordered by (char_idx, emission order) — exactly
-        the order ``_renumber`` + the final document-order sort
-        reconstruct.  Relative positions and offsets are therefore
-        assigned inline and the two-phase renumbering machinery is
-        skipped entirely.  Dropped-by-tag spans never consume a
-        position slot (matching ``_renumber``, which only numbers kept
-        spans) and are never materialized at all.
+        occur ordered by (char_idx, emission order): the relative
+        position of an event is its rank among the events at the same
+        char index, and a span's offset is the rank of its start event
+        in walk order (the reference sorts and renumbers afterwards —
+        html_parser.py:474-494).  Spans of ``always_drop`` tags are
+        never materialized and never take a position slot; spans a
+        length rule drops are removed afterwards by ``_drop_by_length``.
         """
         tag = root.tag
         self.current_tag = tag
@@ -736,8 +590,6 @@ class _Extractor:
         if self._br_newline and tag == "br":
             self._buf_append("\n")  # reference: html_parser.py:470-472
 
-        # _add_text inlined (the two hottest call sites; the general
-        # _linearize path keeps the method)
         act = self._sep_act.get(tag)
         if act is None:
             act = self._sep_act[tag] = (
@@ -755,7 +607,7 @@ class _Extractor:
         self._char_idx = self._len
 
         for child in root.children:
-            self._linearize_fast(child)
+            self._linearize(child)
         self.current_tag = tag
 
         if not dropped:
@@ -777,22 +629,38 @@ class _Extractor:
             self._append_text_content(tail)
         self._char_idx = self._len
 
-    # ---- relative-position renumbering (reference: html_parser.py:474-494)
-    @staticmethod
-    def _renumber(spans: list) -> None:
-        by_idx: dict = defaultdict(dict)
-        for s in spans:
-            by_idx[s.char_start_idx][s.relative_start_pos] = ("start", s)
-            by_idx[s.char_end_idx][s.relative_end_pos] = ("end", s)
-        for events in by_idx.values():
-            idx = 0
-            for pos in sorted(events.keys()):
-                which, s = events[pos]
-                if which == "start":
-                    s.relative_start_pos = idx
-                else:
-                    s.relative_end_pos = idx
-                idx += 1
+    def _drop_by_length(self) -> None:
+        """Remove the spans a length-dependent alone-rule rejects
+        (reference: html_parser.py:578-579) and close the gaps they
+        leave: a kept event's relative position drops by the number of
+        removed events before it at the same char index, and a kept
+        span's offset by the number of removed spans that started
+        before it."""
+        drop_span = self.tag_filter.drop_span
+        kept: list[Span] = []
+        lost_pos: dict = defaultdict(list)
+        lost_offsets: list = []
+        for s in self.spans:
+            if drop_span(s):
+                lost_pos[s.char_start_idx].append(s.relative_start_pos)
+                lost_pos[s.char_end_idx].append(s.relative_end_pos)
+                lost_offsets.append(s.offset)
+            else:
+                kept.append(s)
+        if not lost_offsets:
+            return
+        for positions in lost_pos.values():
+            positions.sort()
+        lost_offsets.sort()
+        for s in kept:
+            positions = lost_pos.get(s.char_start_idx)
+            if positions:
+                s.relative_start_pos -= bisect_left(positions, s.relative_start_pos)
+            positions = lost_pos.get(s.char_end_idx)
+            if positions:
+                s.relative_end_pos -= bisect_left(positions, s.relative_end_pos)
+            s.offset -= bisect_left(lost_offsets, s.offset)
+        self.spans = kept
 
     # ---- driver ------------------------------------------------------------
     def run(self, html_str: str) -> ExtractResult:
@@ -809,56 +677,23 @@ class _Extractor:
             wrapper.append(start)
             root = wrapper
 
-        # the whole rewrite pass is a no-op when the config has no
-        # fold tags, no with-content rules and no global thresholds
-        # (keep_everything): skip the traversal
-        if (
-            self.folder.fold_tags
-            or self.tag_filter.tags_to_remove_with_content
-            or self.tag_filter.txt_max_chr_len_with_content > -float("inf")
-        ):
-            # root itself is never removable here
-            if self._fused_rewrite_ok:
-                self._minify_clean_tree(root, False)
-            else:
-                minify_tree(root)
-                self._clean_tree(root)
-        else:
-            minify_tree(root)
+        # the root itself is never removed; a root dropped top-down is
+        # left as it is, but minified like every other kept node
+        if not self._rewrites or self._rewrite(root, False):
+            _minify(root, False)
 
         self.spans: list[Span] = []
         self._char_idx = 0
         self._parts: list[str] = []
         self._len = 0
         self._last = ""
-        if self.tag_filter._alone_drop_set is not None:
-            # tag-only span dropping: single-pass linearization with
-            # inline renumbering (see _linearize_fast docstring)
-            self._last_idx = -1
-            self._ctr = 0
-            self._rank = 0
-            self._drop_set = self.tag_filter._alone_drop_set
-            self._linearize_fast(root)
-            self.text = "".join(self._parts)
-            return ExtractResult(self.text, self.spans, malformed)
-
-        self._pos_counter: dict = defaultdict(int)
+        self._last_idx = -1
+        self._ctr = 0
+        self._rank = 0
         self._linearize(root)
-        self.text = "".join(self._parts)
-
-        self._renumber(self.spans)
-
-        order = sorted(
-            range(len(self.spans)),
-            key=lambda i: (
-                self.spans[i].char_start_idx,
-                self.spans[i].relative_start_pos,
-            ),
-        )
-        for rank, i in enumerate(order):
-            self.spans[i].offset = rank
-
-        return ExtractResult(self.text, self.spans, malformed)
+        if self.tag_filter.length_rules:
+            self._drop_by_length()
+        return ExtractResult("".join(self._parts), self.spans, malformed)
 
 
 def extract(html_str: str, cfg: ExtractionConfig | None = None) -> ExtractResult:

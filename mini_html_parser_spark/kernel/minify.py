@@ -46,50 +46,20 @@ def _collapse(s: str | None) -> str | None:
     return _WS_RUN.sub(" ", s)
 
 
-def _strip_comments(node: Node) -> None:
-    """Remove comment children, joining the surrounding text runs."""
-    if not node.children:
-        return
-    kept: list[Node] = []
-    for child in node.children:
-        if child.tag == COMMENT_TAG:
-            tail = child.tail or ""
-            if tail:
-                if kept:
-                    kept[-1].tail = (kept[-1].tail or "") + tail
-                else:
-                    node.text = (node.text or "") + tail
-        else:
-            kept.append(child)
-    if len(kept) != len(node.children):
-        node.children = kept
-    for child in kept:
-        _strip_comments(child)
-
-
-def _collapse_ws(node: Node) -> None:
-    if node.tag in PRESERVE_WHITESPACE_TAGS:
-        # keep_pre: subtree text verbatim, but the element's tail is
-        # outside the preserved region
-        node.tail = _collapse(node.tail)
-        return
-    node.text = _collapse(node.text)
-    node.tail = _collapse(node.tail)
-    for child in node.children:
-        _collapse_ws(child)
-
-
 def _minify(node: Node, in_pre: bool) -> None:
-    """Fused strip-comments + collapse pass (one tree walk).
+    """Minify the subtree at ``node`` in place, in one tree walk.
 
-    Equivalent to ``_strip_comments(root); _collapse_ws(root)``: both
-    operations are local to a node, and comment tails always merge
-    into a neighbour *before* that neighbour's text/tail is collapsed
-    (the parent strips its comment children before recursing).
-    ``in_pre`` marks descent inside a preserved subtree: comments are
-    still stripped there (as ``_strip_comments`` does), but nothing is
-    collapsed — not even tails, which ``_collapse_ws`` never visits
-    once it has returned at the preserved ancestor.
+    Both steps are local to a node: a node strips its comment children
+    (joining each comment's tail onto the previous kept sibling's tail,
+    or onto its own text) before its children are visited, so a
+    comment tail always merges raw into a neighbour *before* that
+    neighbour's text/tail is collapsed.  ``in_pre`` marks descent
+    inside a preserved subtree: comments are still stripped there, but
+    nothing is collapsed — not even tails.  A preserved element's own
+    tail lies outside the preserved region and is collapsed.
+
+    Idempotent: a second pass finds no comment and nothing to collapse
+    (the rewrite walk relies on this — kernel/extract.py ``_rewrite``).
     """
     kids = node.children
     if kids:
@@ -126,8 +96,3 @@ def _minify(node: Node, in_pre: bool) -> None:
     for child in kids:
         _minify(child, False)
 
-
-def minify_tree(root: Node) -> Node:
-    """In-place minification; returns ``root`` for chaining."""
-    _minify(root, False)
-    return root

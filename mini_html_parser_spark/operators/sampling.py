@@ -22,10 +22,6 @@ def sample_exact_n(df: DataFrame, n: int, seed: int = 42, id_col: str = "doc_id"
     return df.orderBy(key.asc(), F.col(id_col).asc()).limit(n)
 
 
-def sample_fraction(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    return df.sample(withReplacement=False, fraction=fraction, seed=seed)
-
-
 def enumerate_rows(df: DataFrame, partition_col: str, order_col: str) -> DataFrame:
     """Row numbering within a partition key (reference B10's
     ``doc_id = f"{file}_{compt}"`` line index)."""

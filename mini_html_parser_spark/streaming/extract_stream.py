@@ -4,9 +4,10 @@ The reference is batch-only; its "streaming tokenizer" is the
 incremental within-document parse (SURVEY.md §2 note).  At corpus
 level, a continuously-arriving document feed maps to Structured
 Streaming: the SAME ``extract_documents`` operator runs unmodified on
-a streaming DataFrame (mapInPandas is a stateless narrow map, so the
-micro-batch plan is identical to the batch plan), plus a
-watermark+window span-rate monitor as the stateful-aggregation demo.
+a streaming DataFrame (mapInArrow is a stateless narrow map, so the
+micro-batch plan is identical to the batch plan), plus stateful
+shapes: streaming dedup, sessionization and an event-time windowed
+aggregate with a late-data watermark.
 """
 
 from __future__ import annotations
@@ -239,20 +240,6 @@ def windowed_event_agg(
             F.col("window.end").alias("win_end"),
             "n_events",
             *(["sum_value"] if value_col is not None else []),
-        )
-    )
-
-
-def span_rate_monitor(extracted: DataFrame, window: str = "10 seconds") -> DataFrame:
-    """Windowed spans/sec with late-data watermark (stateful demo)."""
-    stamped = extracted.withColumn("ingest_ts", F.current_timestamp())
-    return (
-        stamped.withWatermark("ingest_ts", "30 seconds")
-        .groupBy(F.window("ingest_ts", window))
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum("n_spans").alias("spans"),
-            F.sum(F.col("malformed").cast("long")).alias("malformed"),
         )
     )
 

@@ -123,7 +123,7 @@ LENGTH_CONFIGS = {
     "boilerplate_strip+top_down_bound": (_boilerplate_top_down, (0, 20)),
 }
 
-CONFIGS = {name: f for name, f in NAMED_CONFIGS.items()}
+CONFIGS = dict(NAMED_CONFIGS)
 CONFIGS.update(
     {name: functools.partial(f, *bounds) for name, (f, bounds) in LENGTH_CONFIGS.items()}
 )

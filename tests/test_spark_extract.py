@@ -1,7 +1,6 @@
 """Spark path == kernel path: the DataFrame pipeline must produce
-span-for-span what the unit-verified scalar kernel produces
-(span-sequence equality (kind, text, media_ref, order) per
-BASELINE.json input_hint)."""
+field-for-field what the unit-verified scalar kernel produces (every
+output column and every span field, per BASELINE.json input_hint)."""
 
 import pandas as pd
 import pytest
@@ -10,6 +9,7 @@ from mini_html_parser_spark.datagen import generate_pandas
 from mini_html_parser_spark.kernel import boilerplate_strip_config, extract
 from mini_html_parser_spark.operators.extract import (
     DOCUMENTS_SCHEMA,
+    OUTPUT_SPAN_SCHEMA,
     assemble_html,
     extract_documents,
     explode_spans,
@@ -37,40 +37,27 @@ def test_row_count_and_schema(extracted):
     assert names == ["doc_id", "text", "spans", "n_spans", "malformed", "n_chars"]
 
 
+def _kernel_span(s) -> dict:
+    row = {f.name: getattr(s, f.name) for f in OUTPUT_SPAN_SCHEMA.fields}
+    row["attrs"], row["attr_values"] = list(s.attrs), list(s.attr_values)
+    return row
+
+
 def test_spark_matches_kernel(extracted, docs_pdf):
+    """Every output column and every span field equals the scalar
+    kernel's, doc by doc and span by span."""
     cfg = boilerplate_strip_config()
     got = {r["doc_id"]: r for r in extracted.collect()}
     assert len(got) == N_DOCS
     for _, row in docs_pdf.iterrows():
         expect = extract(assemble_html(row["spans"]), cfg)
         g = got[row["doc_id"]]
-        assert g["text"] == expect.text
-        assert g["n_spans"] == len(expect.spans)
-        # span-sequence equality: (kind, text slice, media_ref, order)
-        got_seq = [
-            (s["kind"],
-             g["text"][s["char_start_idx"]:s["char_end_idx"]],
-             s["media_ref"], s["offset"])
-            for s in g["spans"]
+        assert (g["text"], g["n_spans"], g["malformed"], g["n_chars"]) == (
+            expect.text, len(expect.spans), expect.malformed, len(expect.text)
+        )
+        assert [s.asDict() for s in g["spans"]] == [
+            _kernel_span(s) for s in expect.spans
         ]
-        exp_seq = [
-            (s.kind,
-             expect.text[s.char_start_idx:s.char_end_idx],
-             s.media_ref, s.offset)
-            for s in expect.spans
-        ]
-        assert got_seq == exp_seq
-        # and the full field tuples
-        for gs, es in zip(g["spans"], expect.spans):
-            assert (
-                gs["value"], gs["char_start_idx"], gs["relative_start_pos"],
-                gs["char_end_idx"], gs["relative_end_pos"],
-                list(gs["attrs"]), list(gs["attr_values"]),
-            ) == (
-                es.value, es.char_start_idx, es.relative_start_pos,
-                es.char_end_idx, es.relative_end_pos,
-                list(es.attrs), [v or "" for v in es.attr_values],
-            )
 
 
 def test_media_spans_preserved_in_order(extracted, docs_pdf):
@@ -105,13 +92,3 @@ def test_malformed_counter(spark):
     out = extract_documents(sdf, "keep_everything")
     rows = {r["doc_id"]: r["malformed"] for r in out.collect()}
     assert rows == {"good": False, "bad": True}
-
-
-def test_engine_parity_arrow_vs_pandas(spark, docs_pdf):
-    """The mapInArrow and mapInPandas paths must be row-identical."""
-    sdf = spark.createDataFrame(docs_pdf, schema=DOCUMENTS_SCHEMA)
-    a = extract_documents(sdf, "boilerplate_strip", engine="arrow").orderBy("doc_id").collect()
-    p = extract_documents(sdf, "boilerplate_strip", engine="pandas").orderBy("doc_id").collect()
-    assert len(a) == len(p) == N_DOCS
-    for x, y in zip(a, p):
-        assert x.asDict(recursive=True) == y.asDict(recursive=True)
