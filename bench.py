@@ -122,7 +122,7 @@ def main() -> None:
     # python-worker pool spin-up + codegen compilation (sidecar r5
     # showed 1.5-2× first-sample skew), and the CLAUDE.md
     # shuffle-reuse rule forbids warming on a measured plan itself —
-    # so touch the same engine paths (mapInPandas extraction, shuffle
+    # so touch the same engine paths (mapInArrow extraction, shuffle
     # agg, broadcast join, pandas UDF workers) at a size none of the
     # timed queries use.
     def _warm_up():

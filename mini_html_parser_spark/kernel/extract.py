@@ -80,7 +80,7 @@ class Span:
     type: str = "local"
     kind: str = "text"  # "text" | "media" (interleaved contract)
     media_ref: str = ""
-    offset: int = -1  # document-order rank, filled after renumbering
+    offset: int = -1  # rank of the span's start in document order
 
 
 @dataclass
@@ -677,8 +677,9 @@ class _Extractor:
             wrapper.append(start)
             root = wrapper
 
-        # the root itself is never removed; a root dropped top-down is
-        # left as it is, but minified like every other kept node
+        # the root itself is never removed: when the walk drops it, it
+        # stays, minified like every other kept node (a top-down drop
+        # returns before its children are minified)
         if not self._rewrites or self._rewrite(root, False):
             _minify(root, False)
 
@@ -718,7 +719,7 @@ def make_extract_fn(cfg: ExtractionConfig | None = None):
 
     The per-document constructor work (frozensets, rule tables, memo
     dicts) is paid once per Spark task instead of once per row, and
-    the TagFilter/decide memos stay warm across documents (guide §4.5
+    the per-tag decision memos stay warm across documents (guide §4.5
     heavyweight-init-once-per-task).  ``_Extractor.run`` resets all
     per-document state, so reuse is safe.
     """

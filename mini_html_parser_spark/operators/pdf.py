@@ -18,9 +18,10 @@ two genuinely-functional layers rather than a stub:
   byte-exact round-trip contract the DuckDB oracle can check in
   closed form.
 
-Spark side: :func:`parse_pdf_documents` is the same Arrow-batched
-``mapInPandas`` shape as the HTML kernel — binary column in, (text,
-n_pages, malformed) out, no per-row Python at the DataFrame level.
+Spark side: :func:`parse_pdf_documents` is an Arrow-batched
+``mapInPandas`` stage, like the HTML kernel's ``mapInArrow`` one —
+binary column in, (text, n_pages, malformed) out, no per-row Python
+at the DataFrame level.
 Malformed bytes degrade to ``malformed=True`` with empty text, the
 same fallback-metric contract as the HTML path.
 """
