@@ -9,6 +9,7 @@ from mini_html_parser_spark.datagen import generate_pandas
 from mini_html_parser_spark.kernel import boilerplate_strip_config, extract
 from mini_html_parser_spark.operators.extract import (
     DOCUMENTS_SCHEMA,
+    EXTRACTED_SCHEMA,
     OUTPUT_SPAN_SCHEMA,
     assemble_html,
     extract_documents,
@@ -92,3 +93,27 @@ def test_malformed_counter(spark):
     out = extract_documents(sdf, "keep_everything")
     rows = {r["doc_id"]: r["malformed"] for r in out.collect()}
     assert rows == {"good": False, "bad": True}
+
+
+def test_engine_parity_arrow_vs_pandas(spark, extracted, docs_pdf):
+    """The hand-built Arrow arrays of the mapInArrow engine must be
+    row-identical to the same kernel results built as per-span dicts in
+    pandas and converted by Spark's own pandas path."""
+    cfg = boilerplate_strip_config()
+    rows = []
+    for _, row in docs_pdf.iterrows():
+        r = extract(assemble_html(row["spans"]), cfg)
+        rows.append({
+            "doc_id": row["doc_id"],
+            "text": r.text,
+            "spans": [_kernel_span(s) for s in r.spans],
+            "n_spans": len(r.spans),
+            "malformed": bool(r.malformed),
+            "n_chars": len(r.text),
+        })
+    p = (spark.createDataFrame(pd.DataFrame(rows), schema=EXTRACTED_SCHEMA)
+         .orderBy("doc_id").collect())
+    a = extracted.orderBy("doc_id").collect()
+    assert len(a) == len(p) == N_DOCS
+    for x, y in zip(a, p):
+        assert x.asDict(recursive=True) == y.asDict(recursive=True)
