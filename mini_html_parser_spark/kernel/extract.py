@@ -351,12 +351,13 @@ class _Extractor:
         self.tag_filter.finalize()
         self._drop_set = self.tag_filter.always_drop
         # the whole rewrite pass is a no-op when the config has no
-        # fold tags, no with-content rules and no global thresholds
-        # (keep_everything): run() then only minifies
+        # fold tags, no with-content rules, no global thresholds and
+        # no density pruning (keep_everything): run() then only minifies
         self._rewrites = bool(
             self.folder.fold_tags
             or self.tag_filter.tags_to_remove_with_content
             or self.tag_filter.txt_max_chr_len_with_content > -INF
+            or cfg.density_prune is not None
         )
         # per-tag memos: separator action for the linearizer, rewrite
         # decision for the rewrite walk (see _decide)

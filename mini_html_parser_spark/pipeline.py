@@ -394,36 +394,35 @@ def run_warc_extraction_job(
     as :func:`run_extraction_job`, PLUS ``warc_malformed_records`` —
     the source-level damage count (bad gzip members, truncated or
     garbage records) that would otherwise vanish in the adapter.
-    The parsed rows are persisted across the damage-count action and
-    the extraction job (then unpersisted — the job's commit action
-    has completed by the time it returns), so the segments are
-    decompressed and parsed ONCE and both numbers describe the same
-    file listing."""
-    from pyspark import StorageLevel
-
+    The segments are parsed ONCE, inside the commit's write job: an
+    Observation ahead of the adapter's null-url filter collects each
+    file's ``(warc_file, file_malformed)`` pair.  AQE drops it when
+    nothing is extracted (resume no-op, no parseable page); only then
+    is the count a second scan of the segments."""
     from .sources.warc import read_warc
 
-    warc_rows = read_warc(spark, warc_path).persist(
-        StorageLevel.MEMORY_AND_DISK
+    damage = Observation("warc_damage")
+    warc_rows = read_warc(spark, warc_path).observe(
+        damage,
+        F.collect_set(F.struct("warc_file", "file_malformed")).alias("files"),
     )
-    try:
-        # per-file damage count rides on every row of its file (and on
-        # a null-url marker row for files with zero parsed pages)
+    result = run_extraction_job(
+        spark,
+        warc_documents(spark, warc_path, warc_rows=warc_rows),
+        output_path,
+        config=config,
+        parallelism=parallelism,
+        **kwargs,
+    )
+    if result["snapshot"] is not None:
+        warc_malformed = sum(f["file_malformed"] for f in damage.get["files"])
+    else:  # per-file count rides on every row of its file
         warc_malformed = (
-            warc_rows.groupBy("warc_file")
+            read_warc(spark, warc_path)
+            .groupBy("warc_file")
             .agg(F.max("file_malformed").alias("m"))
             .agg(F.sum("m").alias("s"))
             .first()["s"]
         ) or 0
-        result = run_extraction_job(
-            spark,
-            warc_documents(spark, warc_path, warc_rows=warc_rows),
-            output_path,
-            config=config,
-            parallelism=parallelism,
-            **kwargs,
-        )
-    finally:
-        warc_rows.unpersist()
     result["warc_malformed_records"] = int(warc_malformed)
     return result

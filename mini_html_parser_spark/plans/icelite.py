@@ -658,10 +658,10 @@ class IceliteTable:
         )
 
     @staticmethod
-    def _file_bucket(rel: str) -> int | None:
+    def _file_bucket(rel: str, col: str = "bucket") -> int | None:
         for part in rel.split(os.sep):
-            if part.startswith("bucket="):
-                return int(part[len("bucket="):])
+            if part.startswith(f"{col}="):
+                return int(part[len(col) + 1:])
         return None
 
     def files_summary(self) -> list[dict]:
@@ -1830,13 +1830,35 @@ class IceliteTable:
                     )
         return sorted(files)
 
-    def _collect_file_stats(self, rel_files: list[str]) -> dict:
+    def _footer_lineage(
+        self, data_dir: str, partition_col: str = "bucket"
+    ) -> tuple[list[str], dict, dict]:
+        """``(data_files, bucket_rows, file_stats)`` of a freshly
+        written data dir, from the parquet footers alone (no Spark
+        job, the data is never re-scanned): rows per lineage bucket
+        sum each file's ``num_rows`` under its ``<partition_col>=``
+        directory.  Each footer is opened once for both lineage and
+        stats.  A footer that cannot be read fails the commit (the
+        lineage would be wrong); the stats stay best-effort."""
+        import pyarrow.parquet as pq
+
+        data_files = self._list_data_files(data_dir)
+        footers = {
+            rel: pq.read_metadata(os.path.join(self.path, rel))
+            for rel in data_files
+        }
+        bucket_rows: dict[str, int] = {}
+        for rel, md in footers.items():
+            b = str(self._file_bucket(rel, partition_col))
+            bucket_rows[b] = bucket_rows.get(b, 0) + md.num_rows
+        return data_files, bucket_rows, self._try_file_stats(footers)
+
+    def _collect_file_stats(self, footers: dict) -> dict:
         """Per-file ``{column: [min, max]}`` bounds for scalar columns,
-        read from the parquet footers the write just produced
-        (metadata-only — the data is never re-scanned).  On a real
-        cluster this bookkeeping belongs in the commit tasks, exactly
-        as Iceberg writers record it during the write; the manifest
-        format is the same either way.
+        from the parquet footers (``{rel: FileMetaData}``) the write
+        just produced.  On a real cluster this bookkeeping belongs in
+        the commit tasks, exactly as Iceberg writers record it during
+        the write; the manifest format is the same either way.
 
         Safety rules (pruning must only ever be a superset):
         - a column missing min/max in ANY row group records no bounds;
@@ -1849,11 +1871,8 @@ class IceliteTable:
           the truncation point — Iceberg solves this with
           truncate-and-increment; dropping the bound is the simple
           safe choice)."""
-        import pyarrow.parquet as pq
-
         out: dict[str, dict] = {}
-        for rel in rel_files:
-            md = pq.ParquetFile(os.path.join(self.path, rel)).metadata
+        for rel, md in footers.items():
             mins: dict = {}
             maxs: dict = {}
             bad: set = set()
@@ -1901,12 +1920,12 @@ class IceliteTable:
                 out[rel] = stats
         return out
 
-    def _try_file_stats(self, rel_files: list[str]) -> dict:
+    def _try_file_stats(self, footers: dict) -> dict:
         """file_stats are an optimization — a stats failure must never
         fail a commit (the manifest simply records no bounds and every
         read keeps the file)."""
         try:
-            return self._collect_file_stats(rel_files)
+            return self._collect_file_stats(footers)
         except Exception:
             return {}
 
@@ -2156,15 +2175,9 @@ class IceliteTable:
         # above emits only _SUCCESS): still publish the compacted
         # manifest — it supersedes the history, expiring both the old
         # data and the now-folded delete files
-        has_data = os.path.isdir(data_dir) and any(
-            name.startswith(f"{bucket_col}=") for name in os.listdir(data_dir)
+        data_files, bucket_rows, file_stats = self._footer_lineage(
+            data_dir, bucket_col
         )
-        if has_data:
-            written = spark.read.option("basePath", data_dir).parquet(data_dir)
-            rows = written.groupBy(bucket_col).count().collect()
-            bucket_rows = {str(r[bucket_col]): r["count"] for r in rows}
-        else:
-            bucket_rows = {}
         # job-level metrics are additive counters (docs parsed, spans
         # emitted, malformed fallbacks): key-wise sum the folded
         # snapshots' metrics so compaction never destroys them.
@@ -2184,7 +2197,6 @@ class IceliteTable:
                     merged_metrics[k] = merged_metrics.get(k, 0) + v
         if stream_ids:
             merged_metrics["stream_batch_ids"] = sorted(stream_ids)
-        data_files = self._list_data_files(data_dir) if has_data else []
         manifest = {
             "sequence": snap_n,
             "snapshot_id": uuid.uuid4().hex,
@@ -2196,7 +2208,7 @@ class IceliteTable:
             "metrics": {**merged_metrics, "compacted_snapshots": len(snaps)},
             "partitioning": layout,
             "compacted": True,
-            "file_stats": self._try_file_stats(data_files),
+            "file_stats": file_stats,
         }
         cur_schema = self.current_schema()
         if cur_schema is not None:
@@ -2316,21 +2328,13 @@ class IceliteTable:
             spark, full, "bucket", sort_within_buckets, zorder
         )
         out.write.partitionBy("bucket").mode("overwrite").parquet(data_dir)
-        has_data = os.path.isdir(data_dir) and any(
-            name.startswith("bucket=") for name in os.listdir(data_dir)
-        )
-        if has_data:
-            written = spark.read.option("basePath", data_dir).parquet(data_dir)
-            rows = written.groupBy("bucket").count().collect()
-            bucket_rows = {str(r["bucket"]): r["count"] for r in rows}
-            data_files = self._list_data_files(data_dir)
-        else:
+        data_files, bucket_rows, file_stats = self._footer_lineage(data_dir)
+        if not data_files:
             # every row of the chosen buckets was deleted: a zero-file
             # rewrite still folds the dead files out of the read
             import shutil
 
             shutil.rmtree(data_dir, ignore_errors=True)
-            bucket_rows, data_files = {}, []
         manifest = {
             "sequence": snap_n,
             "snapshot_id": uuid.uuid4().hex,
@@ -2342,9 +2346,9 @@ class IceliteTable:
             "rewrites_buckets": sorted(buckets),
             "metrics": {"rewritten_files": len(set(replaced))},
             "partitioning": parent.get("partitioning"),
-            "file_stats": self._try_file_stats(data_files),
+            "file_stats": file_stats,
         }
-        if has_data:
+        if data_files:
             manifest["data_dir"] = data_dir
         cur_schema = self.current_schema()
         if cur_schema is not None:
@@ -2830,24 +2834,14 @@ class IceliteTable:
         out.write.partitionBy(partition_col).mode("overwrite").parquet(data_dir)
 
         # empty input (e.g. resume with nothing pending) writes no
-        # partition dirs — detect via listing, drop the husk, no snapshot
-        has_data = any(
-            name.startswith(f"{partition_col}=")
-            for name in (os.listdir(data_dir) if os.path.isdir(data_dir) else [])
+        # data files — drop the husk, no snapshot
+        data_files, bucket_rows, file_stats = self._footer_lineage(
+            data_dir, partition_col
         )
-        if not has_data:
+        if not data_files:
             import shutil
 
             shutil.rmtree(data_dir, ignore_errors=True)
-            return None
-
-        # lineage: rows per bucket of what we just wrote (cheap: parquet
-        # footer counts via a metadata-only scan of the new dir)
-        spark = df.sparkSession
-        written = spark.read.option("basePath", data_dir).parquet(data_dir)
-        rows = written.groupBy(partition_col).count().collect()
-        bucket_rows = {str(r[partition_col]): r["count"] for r in rows}
-        if not bucket_rows:
             return None
 
         if schema is None:
@@ -2872,7 +2866,6 @@ class IceliteTable:
             # action above has completed
             metrics = {**(metrics or {}), **metrics_provider()}
 
-        data_files = self._list_data_files(data_dir)
         manifest = {
             "sequence": snap_n,
             "snapshot_id": uuid.uuid4().hex,
@@ -2884,7 +2877,7 @@ class IceliteTable:
             "metrics": metrics or {},
             "partitioning": partitioning or (parent or {}).get("partitioning"),
             "schema_id": schema["schema_id"],
-            "file_stats": self._try_file_stats(data_files),
+            "file_stats": file_stats,
         }
         if delete_key is not None:
             # MERGE (see merge()): retract this frame's keys from all
@@ -2895,13 +2888,13 @@ class IceliteTable:
             df.select(delete_key).distinct().write.mode("overwrite").parquet(
                 delete_dir
             )
-            n_deleted = spark.read.parquet(delete_dir).count()
+            n_deleted = df.sparkSession.read.parquet(delete_dir).count()
             manifest["delete_key"] = delete_key
             manifest["delete_files"] = self._list_data_files(delete_dir)
             manifest["delete_count"] = int(n_deleted)
         manifest = self._commit_manifest(manifest)
         if auto_compact_every and len(self.snapshots()) >= auto_compact_every:
-            compacted = self.compact(spark)
+            compacted = self.compact(df.sparkSession)
             if compacted is not None:
                 # return the APPEND manifest: callers read their own
                 # commit's metrics from the return value (the job

@@ -39,6 +39,49 @@ def test_commit_read_lineage(spark, tmp_path):
         assert len(files) == 1, (b, files)
 
 
+def _bucket_counts(df):
+    return {str(r["bucket"]): r["count"] for r in df.groupBy("bucket").count().collect()}
+
+
+def test_footer_lineage_matches_spark_counts(spark, tmp_path):
+    """bucket_rows come from the written files' parquet footers (no
+    read-back job); after every kind of write they equal a per-bucket
+    Spark count of what the table reads back."""
+    t = IceliteTable(str(tmp_path / "tbl"))
+    # several files per bucket (no compaction shuffle), uneven buckets
+    a = t.commit_append(_df(spark, 0, 90, n_buckets=5).repartition(3), compact=False)
+    assert a["bucket_rows"] == _bucket_counts(t.read(spark))
+    assert a["total_rows"] == 90
+    b = t.commit_append(_df(spark, 90, 130, n_buckets=3))
+    assert b["bucket_rows"] == _bucket_counts(_df(spark, 90, 130, n_buckets=3))
+    t.commit_delete(spark.createDataFrame([(0,), (1,), (7,), (95,)], "doc_id bigint"))
+
+    r = t.rewrite(spark, buckets={0, 1})
+    assert r["bucket_rows"] == _bucket_counts(t.read(spark, buckets={0, 1}))
+    c = t.compact(spark)
+    assert c["bucket_rows"] == _bucket_counts(t.read(spark))
+    assert c["total_rows"] == 126
+    rb = t.compact(spark, rebucket_to=3)
+    assert rb["bucket_rows"] == _bucket_counts(t.read(spark))
+    assert sorted(rb["bucket_rows"]) == ["0", "1", "2"]
+
+
+def test_unreadable_footer_fails_the_commit(spark, tmp_path, monkeypatch):
+    """Lineage is not best-effort: a footer that cannot be read fails
+    the commit instead of publishing wrong bucket_rows."""
+    import pyarrow.parquet as pq
+    import pytest
+
+    def broken(*_a, **_k):
+        raise OSError("unreadable footer")
+
+    t = IceliteTable(str(tmp_path / "tbl"))
+    monkeypatch.setattr(pq, "read_metadata", broken)
+    with pytest.raises(OSError, match="unreadable footer"):
+        t.commit_append(_df(spark, 0, 20))
+    assert t.snapshots() == []
+
+
 def test_resume_skips_committed_buckets(spark, tmp_path):
     t = IceliteTable(str(tmp_path / "tbl2"))
     # first run commits only buckets 0 and 1 (simulated partial run)

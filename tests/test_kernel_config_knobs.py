@@ -164,6 +164,25 @@ class TestDensityPrune:
         html = '<html><body><p><a href="/1">only a link here padding</a></p></body></html>'
         assert "only a link here" in self._extract(html).text
 
+    def test_density_is_the_only_rewrite_knob(self):
+        # no fold tags and no with-content rules: density pruning
+        # alone must still run the rewrite walk
+        from mini_html_parser_spark.kernel.config import (
+            DensityPruneConfig,
+            ExtractionConfig,
+        )
+        from mini_html_parser_spark.kernel.extract import extract
+
+        html = (
+            '<html><body>'
+            '<div><a href="/1">home</a> <a href="/2">about</a> <a href="/3">contact</a></div>'
+            '<p>twenty-five chars of real body text here</p>'
+            '</body></html>'
+        )
+        cfg = ExtractionConfig(density_prune=DensityPruneConfig())
+        assert extract(html, cfg).text == "twenty-five chars of real body text here\n"
+        assert "home about contact" in extract(html, ExtractionConfig()).text
+
     def test_disabled_by_default(self):
         from mini_html_parser_spark.kernel.config import boilerplate_strip_config
         from mini_html_parser_spark.kernel.extract import extract

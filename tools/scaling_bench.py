@@ -3,8 +3,9 @@
 The rule's two-cluster-size criterion (N → 4N executors, efficiency
 ≥ 0.8) cannot use a real cluster in this sandbox, so per the driver
 instructions it is evidenced by running the SAME extraction job on the
-SAME materialized input at two parallelism levels (default local[8]
-vs local[32]) and reporting docs/sec at both plus
+SAME materialized input at two parallelism levels (default
+local[nproc // 4] vs local[nproc], i.e. local[1] vs local[4] on a
+4-core box) and reporting docs/sec at both plus
 
     efficiency = throughput_4N / (4 * throughput_N)
 
@@ -31,13 +32,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 CORPUS_DIR = os.environ.get("SCALE_CORPUS_DIR", "/tmp/scale_corpus")
 
 
+def nproc() -> int:
+    """Cores this process may run on (what ``nproc`` prints)."""
+    return len(os.sched_getaffinity(0))
+
+
 def gen(n_docs: int, path: str) -> None:
     from mini_html_parser_spark.datagen import generate_documents
     from mini_html_parser_spark.pipeline import build_session
 
-    spark = build_session(master="local[32]")
+    cores = nproc()
+    spark = build_session(master=f"local[{cores}]")
     spark.sparkContext.setLogLevel("ERROR")
-    generate_documents(spark, n_docs, partitions=64).write.mode("overwrite").parquet(path)
+    generate_documents(spark, n_docs, partitions=4 * cores).write.mode(
+        "overwrite").parquet(path)
     spark.stop()
 
 
@@ -107,11 +115,10 @@ def main() -> None:
     if "SCALE_LEVELS" in os.environ:
         levels = [int(x) for x in os.environ["SCALE_LEVELS"].split(",")]
     else:
-        # the full ladder: the N→4N criterion at 2→8 (below this VM's
-        # ~10-effective-core memory-bandwidth ceiling, see
-        # BENCH/BASELINE.md) AND the 8→32 level for protocol honesty
-        levels = [int(os.environ.get("SCALE_N", "2")),
-                  int(os.environ.get("SCALE_4N", "8")), 32]
+        # the N→4N step that fits this box: nproc // 4 → nproc
+        top = nproc()
+        levels = [int(os.environ.get("SCALE_N", max(1, top // 4))),
+                  int(os.environ.get("SCALE_4N", top))]
         levels = sorted(set(levels))
 
     me = os.path.abspath(__file__)
@@ -178,8 +185,7 @@ def main() -> None:
         "reps": reps,
         "idle_gates": gates,
         "ladder": ladder,
-        "north_rule_step": "2->8 (below the VM's ~10-effective-core "
-                           "memory-bandwidth ceiling; see BENCH/BASELINE.md)",
+        "north_rule_step": f"{levels[0]}->{levels[-1]} (nproc={nproc()})",
     }
     path = os.environ.get(
         "SCALE_ARTIFACT",
