@@ -44,7 +44,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 N_SYNTH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "3000"))
 # best-of-3: identical queries swing 2-20× minute-to-minute on this
 # shared VM (measured; see BENCH/BASELINE.md noise caveat) — two

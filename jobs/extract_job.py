@@ -88,12 +88,12 @@ def main(argv=None) -> int:
     spark = builder.getOrCreate()
 
     if args.streaming:
+        from mini_html_parser_spark.operators.extract import extract_documents
         from mini_html_parser_spark.streaming.extract_stream import (
-            extract_stream, read_document_stream, start_extraction_sink,
-            start_icelite_sink,
+            read_document_stream, start_extraction_sink, start_icelite_sink,
         )
 
-        stream = extract_stream(
+        stream = extract_documents(
             read_document_stream(spark, args.input), args.config
         )
         if args.streaming_sink == "icelite":

@@ -57,13 +57,6 @@ class Node:
     def getparent(self):
         return self.parent
 
-    def getprevious(self):
-        p = self.parent
-        if p is None:
-            return None
-        i = p.children.index(self)
-        return p.children[i - 1] if i > 0 else None
-
     def iter(self):
         yield self
         for c in self.children:
@@ -136,10 +129,6 @@ class _DomParser(HTMLParser):
 
     def _cur(self) -> Node:
         return self.stack[-1]
-
-    def _in_document_scope(self) -> bool:
-        """True while no head/body content has been opened yet."""
-        return len(self.stack) == 1 and self.stack[0] is self.root
 
     def _target_for_content(self, tag: str | None) -> Node:
         """Where should new content go when the stack is at <html> level."""
@@ -313,8 +302,9 @@ def parse_document(html_str: str, fast: bool = True) -> tuple[Node, bool]:
 
     ``fast=True`` drives the same DOM sink with the regex scanner of
     :mod:`.fast_scan` (~2-3× faster than stdlib html.parser event
-    dispatch); any scanner error falls back to the stdlib path and
-    counts as a malformed-recovery event.
+    dispatch); any scanner error falls back to the stdlib path, which
+    is equivalent by construction (see :mod:`.fast_scan`), so the
+    fallback alone does not set ``malformed``.
     """
     if fast:
         from . import fast_scan

@@ -1,13 +1,18 @@
 """Corpus pipeline: session, partitioning/skew policy, metrics, job.
 
 The reference's parallelism model is one-file-one-process
-(parse_natural_questions.py:57-64) which skews when one file holds
-giant docs.  Here partitioning is explicit (north_rule):
+(parse_natural_questions.py:57-64), which stalls when one file holds
+giant docs, and its resume skips finished files.  Here the two jobs
+are separate (north_rule: skew handled explicitly):
 
-* salt bucket = ``pmod(xxhash64(doc_id), n_buckets)`` — deterministic,
-  resumable unit of work (the icelite manifest records buckets),
-* ``n_buckets`` defaults to 4× parallelism so the giant-doc tail
-  amortizes across many small tasks instead of stalling one straggler,
+* lineage: ``bucket = pmod(xxhash64(doc_id), n_buckets)``
+  (:func:`with_salt_bucket`, the one definition) — deterministic,
+  recorded per commit in the icelite manifest, the unit resume
+  prunes on; ``n_buckets`` defaults to ``BUCKETS_PER_CORE`` (2) ×
+  parallelism and a table's first commit fixes it,
+* placement: round-robin over ``n_buckets`` partitions
+  (:func:`repartition_for_extraction`), which never reads ``bucket``
+  and balances documents by count, not by size,
 * Arrow batches are kept small (``maxRecordsPerBatch``) so a 2 MB doc
   doesn't blow the Python worker when 64 of them land in one batch,
 * AQE stays on for post-agg stages.
@@ -17,7 +22,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 ARROW_MAX_RECORDS = 256
@@ -57,7 +62,8 @@ def build_session(
     iceberg_catalog: str | None = None,
     iceberg_warehouse: str | None = None,
 ) -> SparkSession:
-    """Session factory.
+    """Session factory.  ``master`` defaults to
+    ``local[$SPARK_GRAFT_CPUS]``, else one core per CPU of the machine.
 
     ``iceberg_catalog``/``iceberg_warehouse`` wire a real Iceberg
     Hadoop catalog on clusters that ship the runtime jar
@@ -65,7 +71,7 @@ def build_session(
     offline, the icelite layer (plans/icelite.py) provides the same
     snapshot/resume semantics over plain parquet.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
     master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
@@ -103,77 +109,46 @@ def iceberg_configs(catalog: str, warehouse: str | None = None) -> dict[str, str
     }
 
 
-# documents above this many chars of span text are scheduled as
-# near-singleton work units (a doc can't be split, so the critical
-# path floor is the single biggest doc — giants must never stack)
-GIANT_DOC_CHARS = 200_000
-GIANT_BUCKET_SPACE = 1024
+BUCKETS_PER_CORE = 2
 
 
 def with_salt_bucket(
-    df: DataFrame, n_buckets: int, doc_id_col: str = "doc_id",
-    spans_col: str | None = "spans", weight: Column | None = None,
+    df: DataFrame, n_buckets: int, key_col: str = "doc_id"
 ) -> DataFrame:
-    """Deterministic size-aware salt bucket — the unit of partitioning
-    AND lineage (north_rule: skew handled explicitly).
-
-    Normal docs hash into [0, n_buckets); giant docs hash into a much
-    larger sparse space [n_buckets, n_buckets + GIANT_BUCKET_SPACE) so
-    two giants almost never share a task (empty buckets cost nothing).
-    Pure function of (doc_id, size) → resumable and replayable.
-    """
-    salt = F.pmod(F.xxhash64(F.col(doc_id_col)), F.lit(n_buckets))
-    if weight is None and spans_col is not None and spans_col in df.columns:
-        weight = F.aggregate(
-            F.col(spans_col), F.lit(0), lambda acc, s: acc + F.length(s["text"])
-        )
-    if weight is not None:
-        giant_salt = n_buckets + F.pmod(
-            F.xxhash64(F.col(doc_id_col)), F.lit(GIANT_BUCKET_SPACE)
-        )
-        bucket = F.when(weight > GIANT_DOC_CHARS, giant_salt).otherwise(salt)
-    else:
-        bucket = salt
-    return df.withColumn("bucket", bucket.cast("int"))
+    """The lineage ``bucket`` column, ``pmod(xxhash64(key), n_buckets)``
+    — the one bucket formula every writer uses (the HTML, PDF and WARC
+    jobs, the streaming icelite sink and ``IceliteTable.compact``'s
+    re-bucket, whose ``key_col`` it takes; every other writer keys on
+    ``doc_id``).  A pure function of ``(doc_id, n_buckets)``, so
+    resume can prune on committed bucket ids.  Placement never reads
+    it."""
+    return df.withColumn(
+        "bucket",
+        F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int"),
+    )
 
 
 def repartition_for_extraction(
-    df: DataFrame, parallelism: int, buckets_per_core: int = 2,
-    doc_id_col: str = "doc_id", n_buckets: int | None = None,
-    weight: Column | None = None,
+    df: DataFrame, parallelism: int | None, n_buckets: int | None = None
 ) -> DataFrame:
-    """Salted repartition ahead of the extraction UDF (reference B6).
+    """Lineage bucket plus physical placement ahead of the extraction
+    UDF (reference B6).
 
-    Two-tier skew policy:
-
-    * normal docs hash into K = parallelism × buckets_per_core
-      partitions on the deterministic salt (uniform weights → uniform
-      partitions),
-    * giant docs are split off and ROUND-ROBIN repartitioned across
-      ``parallelism`` partitions — count-balanced, and giants are all
-      the same order of magnitude, so no partition stacks several of
-      them; the critical path approaches the single-biggest-document
-      floor.
-
-    The lineage ``bucket`` column stays the deterministic size-aware
-    id from with_salt_bucket (resume prunes on the value, which is
-    independent of physical placement).  Task counts stay at a few ×
-    parallelism on purpose: a Python task costs O(100 ms) of fixed
-    overhead, so thousands of near-empty partitions would dominate
-    wall-clock (measured).
+    The rows get :func:`with_salt_bucket`'s ``bucket`` over
+    ``n_buckets`` (default ``parallelism × BUCKETS_PER_CORE``) and are
+    then placed ROUND-ROBIN over ``n_buckets`` partitions.  Placement
+    does not read ``bucket``: resume prunes on the bucket VALUE, and
+    round-robin balances documents by count, not by size (cost-aware
+    placement of giants would go here, not into the label).  Measured
+    fastest on the skewed corpus at local[32] (giant/small split
+    union: 48 s — the two filter branches scan the source twice;
+    byte-balanced scan partitions, no shuffle: 35 s; round-robin:
+    22 s).  Task counts stay at a few × parallelism on
+    purpose: a Python task costs O(100 ms) of fixed overhead, so
+    thousands of near-empty partitions would dominate wall-clock.
     """
-    n_buckets = n_buckets or parallelism * buckets_per_core
-    salted = with_salt_bucket(df, n_buckets, doc_id_col, weight=weight)
-    # Physical placement: ROUND-ROBIN over 2×parallelism partitions —
-    # measured fastest of four strategies on the skewed corpus at
-    # local[32] (two-tier giant/small split union: 48s — the two
-    # filter branches scan the source twice; byte-balanced scan
-    # partitions, no shuffle: 35s; round-robin: 22s).  Round-robin
-    # balances giant docs by count and the giant sizes are within one
-    # order of magnitude, so expected per-partition work is even.
-    # The lineage `bucket` column stays the deterministic size-aware
-    # id — resume prunes on the VALUE, independent of placement.
-    return salted.repartition(n_buckets)
+    n_buckets = n_buckets or parallelism * BUCKETS_PER_CORE
+    return with_salt_bucket(df, n_buckets).repartition(n_buckets)
 
 
 def observed_extraction(extracted: DataFrame) -> tuple[DataFrame, Observation]:
@@ -189,46 +164,14 @@ def observed_extraction(extracted: DataFrame) -> tuple[DataFrame, Observation]:
     return out, obs
 
 
-def _resolve_layout(
-    table, spark: SparkSession, output_path: str,
-    parallelism: int | None, buckets_per_core: int,
-) -> tuple[int, int, dict]:
-    """Resume-stable bucket layout: reuse the manifest-recorded layout
-    verbatim, error on conflicting explicit requests (see
-    run_extraction_job docstring)."""
-    recorded = table.partitioning()
-    if recorded is not None:
-        if (recorded.get("giant_bucket_space"), recorded.get("giant_doc_chars")) != (
-            GIANT_BUCKET_SPACE, GIANT_DOC_CHARS
-        ):
-            raise ValueError(
-                f"resume layout mismatch: table {output_path} was committed with "
-                f"giant-doc tier {recorded}, but this build uses "
-                f"{GIANT_BUCKET_SPACE}/{GIANT_DOC_CHARS}"
-            )
-        n_buckets = int(recorded["n_buckets"])
-        if parallelism is not None and parallelism * buckets_per_core != n_buckets:
-            raise ValueError(
-                f"resume layout mismatch: table {output_path} was committed with "
-                f"n_buckets={n_buckets}; requested parallelism={parallelism} × "
-                f"buckets_per_core={buckets_per_core} = {parallelism * buckets_per_core}. "
-                "Omit `parallelism` to reuse the recorded layout."
-            )
-        parallelism = parallelism or max(1, n_buckets // buckets_per_core)
-    else:
-        parallelism = parallelism or spark.sparkContext.defaultParallelism
-        n_buckets = parallelism * buckets_per_core
-    layout = {
-        "n_buckets": n_buckets,
-        "giant_bucket_space": GIANT_BUCKET_SPACE,
-        "giant_doc_chars": GIANT_DOC_CHARS,
-    }
-    if recorded is not None and recorded.get("rebucketed"):
-        # sticky: once the table has been re-laid-out, every future
-        # manifest must keep advertising exact-resume (see
-        # IceliteTable.requires_exact_resume)
-        layout["rebucketed"] = True
-    return parallelism, n_buckets, layout
+def resolve_layout(table, n_buckets: int) -> dict:
+    """The bucket layout a commit to ``table`` records: the table's
+    recorded layout verbatim (its ``n_buckets`` and the sticky
+    ``rebucketed`` flag — see ``IceliteTable.requires_exact_resume``),
+    or ``{"n_buckets": n_buckets}`` for its first commit.  Bucket ids
+    are a function of ``n_buckets``, so every later commit must reuse
+    the first one's."""
+    return table.partitioning() or {"n_buckets": n_buckets}
 
 
 def run_pdf_extraction_job(
@@ -236,16 +179,14 @@ def run_pdf_extraction_job(
     pdfs: DataFrame,
     output_path: str,
     parallelism: int | None = None,
-    buckets_per_core: int = 2,
     auto_compact_every: int | None = None,
     mode: str = "resume",
 ) -> dict:
     """PDF-corpus variant of :func:`run_extraction_job`: input is
     ``(doc_id, content binary)``, the extractor is
     :func:`~.operators.pdf.parse_pdf_interleaved`, and everything else
-    — size-aware salting (giant tier keyed on the PDF byte length),
-    committed-bucket resume, per-bucket lineage, observed metrics,
-    auto-compaction — is the same machinery.  Output rows carry the
+    — bucket salting, committed-bucket resume, per-bucket lineage,
+    observed metrics, auto-compaction — is the same machinery.  Output rows carry the
     interleaved span contract, so downstream consumers are shared with
     the HTML path."""
     from .operators.pdf import parse_pdf_interleaved
@@ -255,9 +196,7 @@ def run_pdf_extraction_job(
         lambda pending: parse_pdf_interleaved(
             pending, passthrough_cols=["bucket"]
         ).withColumn("n_spans", F.size("spans")),
-        parallelism, buckets_per_core, auto_compact_every,
-        weight=F.length("content"),
-        mode=mode,
+        parallelism, auto_compact_every, mode,
     )
 
 
@@ -267,7 +206,6 @@ def run_extraction_job(
     output_path: str,
     config: str = "boilerplate_strip",
     parallelism: int | None = None,
-    buckets_per_core: int = 2,
     auto_compact_every: int | None = None,
     mode: str = "resume",
 ) -> dict:
@@ -294,8 +232,7 @@ def run_extraction_job(
         lambda pending: extract_documents(
             pending, config, passthrough_cols=["bucket"]
         ),
-        parallelism, buckets_per_core, auto_compact_every,
-        mode=mode,
+        parallelism, auto_compact_every, mode,
     )
 
 
@@ -305,10 +242,8 @@ def _run_job(
     output_path: str,
     extract_stage,
     parallelism: int | None,
-    buckets_per_core: int,
     auto_compact_every: int | None,
-    weight: Column | None = None,
-    mode: str = "resume",
+    mode: str,
 ) -> dict:
     """Shared job tail: layout resolve → salt → committed-bucket prune
     → extract_stage → observed metrics → icelite commit.  Both the
@@ -334,12 +269,20 @@ def _run_job(
     from .plans.icelite import IceliteTable
 
     table = IceliteTable(output_path)
-    parallelism, n_buckets, layout = _resolve_layout(
-        table, spark, output_path, parallelism, buckets_per_core
+    layout = resolve_layout(
+        table,
+        BUCKETS_PER_CORE * (parallelism or spark.sparkContext.defaultParallelism),
     )
-    salted = repartition_for_extraction(
-        df, parallelism, n_buckets=n_buckets, weight=weight
-    )
+    n_buckets = int(layout["n_buckets"])
+    if parallelism is not None and parallelism * BUCKETS_PER_CORE != n_buckets:
+        raise ValueError(
+            f"resume layout mismatch: table {output_path} was committed with "
+            f"n_buckets={n_buckets}; requested parallelism={parallelism} × "
+            f"{BUCKETS_PER_CORE} buckets per core = "
+            f"{parallelism * BUCKETS_PER_CORE}. "
+            "Omit `parallelism` to reuse the recorded layout."
+        )
+    salted = repartition_for_extraction(df, parallelism, n_buckets=n_buckets)
     # prune committed buckets (resume) or take everything (append)
     pending = table.filter_pending(salted) if mode == "resume" else salted
     observed, obs = observed_extraction(extract_stage(pending))

@@ -1768,9 +1768,17 @@ class IceliteTable:
         (coarser-per-doc) mapping can mark a bucket committed while some
         of its docs were never ingested under the OLD layout, so resume
         must fall back to the doc-exact anti-join.  The flag is sticky —
-        exact resume is always correct, merely costlier."""
-        layout = self.partitioning()
-        return bool(layout and layout.get("rebucketed"))
+        exact resume is always correct, merely costlier.
+
+        Tables first committed by builds that gave giant documents
+        (> 200 000 chars) a bucket in a sparse space above
+        ``n_buckets`` record that tier in their layout; their giants
+        carry labels today's ``pmod(xxhash64(doc_id), n_buckets)``
+        never produces, so they resume doc-exact too."""
+        layout = self.partitioning() or {}
+        return bool(
+            layout.get("rebucketed") or "giant_bucket_space" in layout
+        )
 
     def filter_pending(
         self,
@@ -2114,10 +2122,9 @@ class IceliteTable:
         contracts change:
 
         - future appends via ``run_extraction_job`` salt into the NEW
-          ``n_buckets`` (the recorded layout is authoritative; the
-          giant-doc tier still applies to them — the rewritten rows
-          themselves take the plain hash, which only affects lineage
-          labels, never read results);
+          ``n_buckets`` (the recorded layout is authoritative) with the
+          same ``pipeline.with_salt_bucket`` formula as the rewritten
+          rows;
         - the manifest carries a sticky ``rebucketed`` flag and resume
           switches from bucket-level skip-if-done to the doc-exact
           anti-join (see :meth:`requires_exact_resume` for why the
@@ -2151,11 +2158,9 @@ class IceliteTable:
                     f"rebucket_to needs key column {key_col!r}; table has "
                     f"{full.columns}"
                 )
-            full = full.withColumn(
-                bucket_col,
-                F.pmod(F.xxhash64(F.col(key_col)), F.lit(int(rebucket_to)))
-                .cast("int"),
-            )
+            from ..pipeline import with_salt_bucket
+
+            full = with_salt_bucket(full, int(rebucket_to), key_col)
             layout = {
                 **(layout or {}),
                 "n_buckets": int(rebucket_to),

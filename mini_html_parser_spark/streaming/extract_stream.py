@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.extract import DOCUMENTS_SCHEMA, extract_documents
+from ..operators.extract import DOCUMENTS_SCHEMA
 
 
 def read_document_stream(
@@ -25,12 +25,6 @@ def read_document_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
-
-
-def extract_stream(
-    documents: DataFrame, config: str = "boilerplate_strip"
-) -> DataFrame:
-    return extract_documents(documents, config)
 
 
 def start_extraction_sink(
@@ -264,13 +258,12 @@ def icelite_batch_writer(
     maintained in the closure, so the per-batch check is O(1), not
     O(snapshots) manifest reads per batch (review r5 #3).
 
-    Bucketing (review r5 #3): the SAME salt rule as the batch job —
-    ``pipeline.with_salt_bucket`` with the giant-doc sparse tier —
-    and the TABLE'S recorded layout wins over the ``n_buckets``
-    argument, exactly like ``run_extraction_job``'s resume-layout
-    contract, so a stream-fed table and a batch-fed table are the
-    same kind of table (batch appends, resume pruning, and
-    bucket-pruned reads all stay coherent).
+    Bucketing (review r5 #3): the SAME bucket formula and layout
+    resolver as the batch job (``pipeline.with_salt_bucket``,
+    ``pipeline.resolve_layout``) — the TABLE'S recorded layout wins
+    over the ``n_buckets`` argument — so a stream-fed table and a
+    batch-fed table are the same kind of table (batch appends, resume
+    pruning, and bucket-pruned reads all stay coherent).
 
     ``maintain_every=N`` runs SCALE-CORRECT in-line maintenance: every
     N committed batches, buckets whose live-file count exceeds
@@ -283,9 +276,7 @@ def icelite_batch_writer(
     replay is untouched, and its require_parent abort makes a race
     with a concurrent batch append a skipped cycle, not a conflict.
     Main-table only — maintenance belongs to main, not a WAP branch."""
-    from ..pipeline import (
-        GIANT_BUCKET_SPACE, GIANT_DOC_CHARS, with_salt_bucket,
-    )
+    from ..pipeline import resolve_layout, with_salt_bucket
     from ..plans.icelite import IceliteTable
 
     if maintain_every and branch:
@@ -314,31 +305,8 @@ def icelite_batch_writer(
             state["loaded"] = True
         if batch_id in seen:
             return  # replay of an already-committed batch
-        recorded = table.partitioning()
-        nb = n_buckets
-        if recorded is not None:
-            if (
-                recorded.get("giant_bucket_space"),
-                recorded.get("giant_doc_chars"),
-            ) != (GIANT_BUCKET_SPACE, GIANT_DOC_CHARS):
-                raise ValueError(
-                    f"stream layout mismatch: table {table_path} was "
-                    f"committed with giant-doc tier {recorded}, but this "
-                    f"build uses {GIANT_BUCKET_SPACE}/{GIANT_DOC_CHARS}"
-                )
-            nb = int(recorded["n_buckets"])
-        layout = {
-            "n_buckets": nb,
-            "giant_bucket_space": GIANT_BUCKET_SPACE,
-            "giant_doc_chars": GIANT_DOC_CHARS,
-        }
-        # giant-doc weight: the EXTRACTED frame carries n_chars (its
-        # spans struct has no raw `text` field for the default weight
-        # inference); un-extracted feeds fall back to the plain salt
-        if "n_chars" in df.columns:
-            salted = with_salt_bucket(df, nb, weight=F.col("n_chars"))
-        else:
-            salted = with_salt_bucket(df, nb, spans_col=None)
+        layout = resolve_layout(table, n_buckets)
+        salted = with_salt_bucket(df, int(layout["n_buckets"]))
         if (
             table.commit_append(
                 salted,

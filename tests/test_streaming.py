@@ -4,9 +4,11 @@ file sink with checkpoint resume."""
 import os
 
 from mini_html_parser_spark.datagen import generate_pandas
-from mini_html_parser_spark.operators.extract import DOCUMENTS_SCHEMA
+from mini_html_parser_spark.operators.extract import (
+    DOCUMENTS_SCHEMA,
+    extract_documents,
+)
 from mini_html_parser_spark.streaming.extract_stream import (
-    extract_stream,
     read_document_stream,
     start_extraction_sink,
 )
@@ -25,7 +27,7 @@ def test_streaming_extraction_with_resume(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     _write_input(spark, inp, 0, 10)
-    stream = extract_stream(read_document_stream(spark, inp))
+    stream = extract_documents(read_document_stream(spark, inp))
     assert stream.isStreaming
     q = start_extraction_sink(stream, out, ckpt, available_now=True)
     q.awaitTermination(120)
@@ -34,7 +36,7 @@ def test_streaming_extraction_with_resume(spark, tmp_path):
     # new files arrive; restart from checkpoint → only the delta is processed
     _write_input(spark, inp, 10, 15)
     q2 = start_extraction_sink(
-        extract_stream(read_document_stream(spark, inp)), out, ckpt
+        extract_documents(read_document_stream(spark, inp)), out, ckpt
     )
     q2.awaitTermination(120)
     result = spark.read.parquet(out)
@@ -283,7 +285,7 @@ def test_streaming_quality_filters_compose(spark, tmp_path):
         gopher_quality, language_id, quality_score,
     )
     from mini_html_parser_spark.streaming.extract_stream import (
-        extract_stream, read_document_stream,
+        read_document_stream,
     )
 
     inp = str(tmp_path / "in")
@@ -291,7 +293,7 @@ def test_streaming_quality_filters_compose(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     _write_input(spark, inp, 0, 12)
 
-    stream = extract_stream(read_document_stream(spark, inp))
+    stream = extract_documents(read_document_stream(spark, inp))
     flagged = language_id(
         quality_score(gopher_quality(stream, min_words=1, min_stop_hits=0))
     )
@@ -334,7 +336,7 @@ def test_streaming_icelite_sink_exactly_once(spark, tmp_path):
     then serves the stream's history."""
     from mini_html_parser_spark.plans.icelite import IceliteTable
     from mini_html_parser_spark.streaming.extract_stream import (
-        extract_stream, icelite_batch_writer, read_document_stream,
+        icelite_batch_writer, read_document_stream,
         start_icelite_sink,
     )
 
@@ -344,7 +346,7 @@ def test_streaming_icelite_sink_exactly_once(spark, tmp_path):
 
     _write_input(spark, inp, 0, 8)
     q = start_icelite_sink(
-        extract_stream(read_document_stream(spark, inp)), tbl, ckpt,
+        extract_documents(read_document_stream(spark, inp)), tbl, ckpt,
         n_buckets=8,
     )
     q.awaitTermination(120)
@@ -359,7 +361,7 @@ def test_streaming_icelite_sink_exactly_once(spark, tmp_path):
     replay_id = snaps1[-1]["metrics"]["stream_batch_id"]
     docs = spark.createDataFrame(generate_pandas(8, seed=42, start=0),
                                  schema=DOCUMENTS_SCHEMA)
-    icelite_batch_writer(tbl, n_buckets=8)(extract_stream(docs), replay_id)
+    icelite_batch_writer(tbl, n_buckets=8)(extract_documents(docs), replay_id)
     assert t.read(spark).count() == 8          # no double ingest
     assert len(t.snapshots()) == len(snaps1)
 
@@ -367,7 +369,7 @@ def test_streaming_icelite_sink_exactly_once(spark, tmp_path):
     # incremental scan serves exactly the new rows
     _write_input(spark, inp, 8, 13)
     q2 = start_icelite_sink(
-        extract_stream(read_document_stream(spark, inp)), tbl, ckpt,
+        extract_documents(read_document_stream(spark, inp)), tbl, ckpt,
         n_buckets=8,
     )
     q2.awaitTermination(120)
@@ -383,7 +385,7 @@ def test_streaming_icelite_sink_exactly_once(spark, tmp_path):
     assert t.compact(spark) is not None
     folded = t.snapshots()[-1]["metrics"]["stream_batch_ids"]
     assert replay_id in folded
-    icelite_batch_writer(tbl, n_buckets=8)(extract_stream(docs), replay_id)
+    icelite_batch_writer(tbl, n_buckets=8)(extract_documents(docs), replay_id)
     assert t.read(spark).count() == 13
 
     # the stream-created table is the SAME kind of table the batch
@@ -486,7 +488,7 @@ def test_streaming_wap_branch_sink(spark, tmp_path):
     replay-skip set loads from the merged view)."""
     from mini_html_parser_spark.plans.icelite import IceliteTable
     from mini_html_parser_spark.streaming.extract_stream import (
-        extract_stream, icelite_batch_writer, read_document_stream,
+        icelite_batch_writer, read_document_stream,
         start_icelite_sink,
     )
 
@@ -496,7 +498,7 @@ def test_streaming_wap_branch_sink(spark, tmp_path):
 
     # main starts with an audited base
     t = IceliteTable(tbl)
-    base = extract_stream(
+    base = extract_documents(
         spark.createDataFrame(generate_pandas(4, seed=42, start=100),
                               schema=DOCUMENTS_SCHEMA)
     )
@@ -508,7 +510,7 @@ def test_streaming_wap_branch_sink(spark, tmp_path):
     t.create_branch("ingest")
     _write_input(spark, inp, 0, 8)
     q = start_icelite_sink(
-        extract_stream(read_document_stream(spark, inp)), tbl, ckpt,
+        extract_documents(read_document_stream(spark, inp)), tbl, ckpt,
         n_buckets=8, branch="ingest",
     )
     q.awaitTermination(120)
@@ -525,7 +527,7 @@ def test_streaming_wap_branch_sink(spark, tmp_path):
     # post-publish crash-replay of the staged batch id: no-op
     docs = spark.createDataFrame(generate_pandas(8, seed=42, start=0),
                                  schema=DOCUMENTS_SCHEMA)
-    icelite_batch_writer(tbl, n_buckets=8)(extract_stream(docs), staged_id)
+    icelite_batch_writer(tbl, n_buckets=8)(extract_documents(docs), staged_id)
     assert t.read(spark).count() == 12
 
 
