@@ -75,7 +75,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from mini_html_parser_spark.datagen import generate_documents
-    from mini_html_parser_spark.operators.extract import extract_documents
+    from mini_html_parser_spark.operators.extract import extract_documents, extract_html
     from mini_html_parser_spark.operators import stats
     from mini_html_parser_spark.pipeline import build_session, repartition_for_extraction
     from mini_html_parser_spark.queries import (
@@ -208,15 +208,10 @@ def main() -> None:
         def run_wiki():
             wiki_docs = spark.range(0, n_wiki, numPartitions=CPUS * 2).select(
                 F.col("id").cast("string").alias("doc_id"),
-                F.array(F.struct(
-                    F.lit("html").alias("kind"),
-                    F.lit(wiki_html).alias("text"),
-                    F.lit("").alias("media_ref"),
-                    F.lit(0).alias("offset"),
-                )).alias("spans"),
+                F.lit(wiki_html).alias("html"),
             )
             return (
-                extract_documents(wiki_docs, "boilerplate_strip")
+                extract_html(wiki_docs, "boilerplate_strip")
                 .select(F.count(F.lit(1)).alias("docs"))
                 .collect()[0]
             )
@@ -333,7 +328,7 @@ def main() -> None:
         def run_warc():
             rows = read_warc(spark, warc_dir, repartition_files=n_seg)
             docs = warc_documents(spark, warc_dir, warc_rows=rows)
-            ext = extract_documents(docs, "boilerplate_strip")
+            ext = extract_html(docs, "boilerplate_strip")
             return ext.select(
                 F.count(F.lit(1)).alias("docs"),
                 F.sum("n_chars").alias("chars"),

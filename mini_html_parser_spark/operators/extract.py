@@ -13,14 +13,17 @@ reference emitting ``img`` as a zero-length inline span carrying
 ``src`` — reference html_parser.py:75 and the 6 img rows of
 parse_scripts/data_test/wiki_page_metadata.jsonl).
 
-The whole per-document kernel runs inside ONE ``mapInArrow`` UDF
-(SURVEY.md §2A): per-row Python exists only *inside* the vectorized
-batch, never at the DataFrame level.
+Two entry points.  :func:`extract_documents` takes the spans contract
+and renders each document's HTML once, in Catalyst (:func:`document_html`,
+one JVM projection; :func:`assemble_html` is its scalar reference).
+:func:`extract_html` takes ``(doc_id, html)`` and is the only
+``mapInArrow`` UDF: the whole per-document kernel runs inside the
+vectorized batch (SURVEY.md §2A), and it never sees ``spans``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -74,12 +77,35 @@ EXTRACTED_SCHEMA = StructType([
 ])
 
 
+def document_html(spans) -> Column:
+    """Interleaved spans → renderable HTML string, as one Catalyst
+    expression: each span becomes ``struct(offset, index, piece)``,
+    ``sort_array`` orders them (NULL offsets first; the index keeps
+    ties in input order), and the pieces are joined.  A NULL span
+    renders ``""``, as does a NULL or empty array."""
+    def keyed(s, i):
+        piece = F.when(
+            s["kind"] == "media",
+            F.concat(F.lit('<img src="'), F.coalesce(s["media_ref"], F.lit("")),
+                     F.lit('" alt="">')),
+        ).otherwise(F.coalesce(s["text"], F.lit("")))
+        return F.struct(s["offset"].alias("offset"), i.alias("index"),
+                        piece.alias("piece"))
+
+    ordered = F.sort_array(F.transform(spans, keyed))
+    return F.coalesce(
+        F.array_join(F.transform(ordered, lambda k: k["piece"]), ""), F.lit("")
+    )
+
+
 def assemble_html(spans) -> str:
-    """Interleaved spans → renderable HTML string (offset order)."""
+    """Scalar reference of :func:`document_html` (same NULL and tie
+    rules), for tests and benchmarks."""
     if spans is None:
         return ""
     parts = []
-    for s in sorted(spans, key=lambda x: x["offset"]):
+    for s in sorted((s for s in spans if s is not None),
+                    key=lambda x: (x["offset"] is not None, x["offset"] or 0)):
         if s["kind"] == "media":
             parts.append(f'<img src="{s["media_ref"] or ""}" alt="">')
         else:
@@ -98,13 +124,28 @@ def extract_documents(
     config: ExtractionConfig | str = "boilerplate_strip",
     passthrough_cols: list[str] | None = None,
 ) -> DataFrame:
-    """documents → extracted: the corpus parse job as one narrow stage.
+    """documents ``(doc_id, spans)`` → extracted: :func:`extract_html`
+    over each document's :func:`document_html`."""
+    passthrough = passthrough_cols or []
+    return extract_html(
+        df.select("doc_id", document_html("spans").alias("html"), *passthrough),
+        config, passthrough,
+    )
 
-    ``df`` carries interleaved ``spans`` (input_hint shape).  The
-    kernel runs inside ``mapInArrow`` batches, and the nested span
-    output is built as flat Arrow arrays + offsets, not per-span
-    Python dicts; no shuffle is introduced — partitioning/salting is
-    the caller's concern (see pipeline.repartition_for_extraction).
+
+def extract_html(
+    df: DataFrame,
+    config: ExtractionConfig | str = "boilerplate_strip",
+    passthrough_cols: list[str] | None = None,
+) -> DataFrame:
+    """``(doc_id, html)`` → extracted: the corpus parse job as one
+    narrow stage.
+
+    The kernel runs inside ``mapInArrow`` batches over the ``html``
+    strings (a NULL parses as ``""``), and the nested span output is
+    built as flat Arrow arrays + offsets, not per-span Python dicts;
+    no shuffle is introduced — partitioning/salting is the caller's
+    concern (see pipeline.repartition_for_extraction).
 
     ``passthrough_cols`` are copied verbatim to the output (e.g. the
     salt ``bucket``, so lineage uses the exact partitioning key).
@@ -125,7 +166,7 @@ def extract_documents(
         extract_one = make_extract_fn(cfg)  # once per task (guide §4.5)
         for batch in batches:
             doc_ids = batch.column("doc_id").to_pylist()
-            spans_in = batch.column("spans").to_pylist()
+            htmls = batch.column("html").to_pylist()
 
             texts: list = []
             n_spans: list = []
@@ -134,8 +175,8 @@ def extract_documents(
             span_offsets = [0]
             all_spans: list = []
 
-            for spans in spans_in:
-                r = extract_one(assemble_html(spans))
+            for html in htmls:
+                r = extract_one(html or "")
                 texts.append(r.text)
                 n_spans.append(len(r.spans))
                 malformed.append(bool(r.malformed))

@@ -246,9 +246,9 @@ def _run_job(
     mode: str,
 ) -> dict:
     """Shared job tail: layout resolve → salt → committed-bucket prune
-    → extract_stage → observed metrics → icelite commit.  Both the
-    HTML and PDF jobs are thin wrappers, so commit/resume/metrics
-    semantics cannot drift between the two paths.
+    → extract_stage → observed metrics → icelite commit.  The HTML,
+    WARC and PDF jobs are thin wrappers, so commit/resume/metrics
+    semantics cannot drift between the paths.
 
     ``mode``: ``"resume"`` (default) prunes already-committed buckets
     — re-running the SAME corpus is a no-op (skip-if-done).
@@ -300,28 +300,16 @@ def _run_job(
 def warc_documents(
     spark: SparkSession, warc_path: str, warc_rows: DataFrame | None = None
 ) -> DataFrame:
-    """WARC crawl segments → the engine's interleaved document
-    contract ``(doc_id, spans)`` (doc_id = target URI, one html span
-    per response record) — the adapter between
-    :func:`sources.warc.read_warc` and :func:`run_extraction_job`,
-    so a raw crawl runs through the same salted/resumable pipeline
-    as any other corpus."""
+    """WARC crawl segments → ``(doc_id, html)`` (doc_id = target URI,
+    one row per response record) — the adapter between
+    :func:`sources.warc.read_warc` and
+    :func:`~.operators.extract.extract_html`."""
     from .sources.warc import read_warc
 
     if warc_rows is None:
         warc_rows = read_warc(spark, warc_path)
     rows = warc_rows.filter(F.col("url").isNotNull())
-    return rows.select(
-        F.col("url").alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("html").alias("kind"),
-                F.col("html").alias("text"),
-                F.lit("").alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
-    )
+    return rows.select(F.col("url").alias("doc_id"), "html")
 
 
 def run_warc_extraction_job(
@@ -330,11 +318,14 @@ def run_warc_extraction_job(
     output_path: str,
     config: str = "boilerplate_strip",
     parallelism: int | None = None,
-    **kwargs,
+    auto_compact_every: int | None = None,
+    mode: str = "resume",
 ) -> dict:
     """Crawl-in, spans-out: WARC segments through the full salted +
-    icelite-resumable extraction job.  Same metrics/lineage contract
-    as :func:`run_extraction_job`, PLUS ``warc_malformed_records`` —
+    icelite-resumable extraction job — :func:`warc_documents`' pages go
+    straight to :func:`~.operators.extract.extract_html`, with no span
+    array in between.  Same metrics/lineage contract as
+    :func:`run_extraction_job`, PLUS ``warc_malformed_records`` —
     the source-level damage count (bad gzip members, truncated or
     garbage records) that would otherwise vanish in the adapter.
     The segments are parsed ONCE, inside the commit's write job: an
@@ -342,6 +333,7 @@ def run_warc_extraction_job(
     file's ``(warc_file, file_malformed)`` pair.  AQE drops it when
     nothing is extracted (resume no-op, no parseable page); only then
     is the count a second scan of the segments."""
+    from .operators.extract import extract_html
     from .sources.warc import read_warc
 
     damage = Observation("warc_damage")
@@ -349,13 +341,10 @@ def run_warc_extraction_job(
         damage,
         F.collect_set(F.struct("warc_file", "file_malformed")).alias("files"),
     )
-    result = run_extraction_job(
-        spark,
-        warc_documents(spark, warc_path, warc_rows=warc_rows),
-        output_path,
-        config=config,
-        parallelism=parallelism,
-        **kwargs,
+    result = _run_job(
+        spark, warc_documents(spark, warc_path, warc_rows=warc_rows), output_path,
+        lambda pending: extract_html(pending, config, passthrough_cols=["bucket"]),
+        parallelism, auto_compact_every, mode,
     )
     if result["snapshot"] is not None:
         warc_malformed = sum(f["file_malformed"] for f in damage.get["files"])

@@ -30,7 +30,7 @@ from .operators import (
     stats,
     text_analysis,
 )
-from .operators.extract import extract_documents, explode_spans
+from .operators.extract import extract_documents, extract_html, explode_spans
 from .sources.readers import load_table
 
 
@@ -41,6 +41,11 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =========================================================================
 # Extraction family (kernel through Spark; oracle = closed-form offsets)
 # =========================================================================
+
+def _html_documents(docs: DataFrame, html) -> DataFrame:
+    """The documents table as ``(doc_id, html)`` pages for extract_html."""
+    return docs.select(F.col("doc_id").cast("string").alias("doc_id"), html.alias("html"))
+
 
 # HTML template: <html><head><title>t</title></head><body>
 #   <h1>Title {doc_id}</h1><div class="main"><p>{text}</p></div>
@@ -61,21 +66,11 @@ def _flagship_documents(docs: DataFrame) -> DataFrame:
         F.col("text"),
         F.lit('</p></div><footer>boilerplate footer</footer></body></html>'),
     )
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("html").alias("kind"),
-                html.alias("text"),
-                F.lit("").alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
-    )
+    return _html_documents(docs, html)
 
 
 def q_extract_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ext = extract_documents(_flagship_documents(_docs(spark, sf_dir)), "boilerplate_strip")
+    ext = extract_html(_flagship_documents(_docs(spark, sf_dir)), "boilerplate_strip")
     return (
         explode_spans(ext)
         .select(
@@ -219,7 +214,7 @@ FROM b
 
 
 def q_extract_tag_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ext = extract_documents(_flagship_documents(_docs(spark, sf_dir)), "boilerplate_strip")
+    ext = extract_html(_flagship_documents(_docs(spark, sf_dir)), "boilerplate_strip")
     return (
         explode_spans(ext)
         .groupBy("tag")
@@ -236,7 +231,7 @@ GROUP BY tag
 
 def q_extract_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The extracted plain text itself: 'Title {id}\\n{text}\\n'."""
-    ext = extract_documents(_flagship_documents(_docs(spark, sf_dir)), "boilerplate_strip")
+    ext = extract_html(_flagship_documents(_docs(spark, sf_dir)), "boilerplate_strip")
     return ext.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.col("text").alias("plain_text"),
@@ -257,7 +252,7 @@ FROM documents
 def q_extract_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B18+B20 through the REAL extraction: corpus describe() of the
     per-(doc,tag) text_length_mean stat."""
-    ext = extract_documents(_flagship_documents(_docs(spark, sf_dir)), "boilerplate_strip")
+    ext = extract_html(_flagship_documents(_docs(spark, sf_dir)), "boilerplate_strip")
     per_doc = stats.span_stats(ext)
     described = stats.tag_stats(per_doc).filter(F.col("stat_col") == "text_length_mean")
     return described.select(
@@ -302,23 +297,10 @@ def q_extract_br_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal newline and its span is dropped (reference:
     parse_scripts/parse_natural_questions_Toy_keep_everything.py:57-105;
     pinned offsets: L1 = len('Line one')."""
-    docs = _docs(spark, sf_dir)
-    inter = docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("html").alias("kind"),
-                F.concat(
-                    F.lit("<html><body><p>Line one<br>"),
-                    F.col("text"),
-                    F.lit("</p></body></html>"),
-                ).alias("text"),
-                F.lit("").alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
+    html = F.concat(
+        F.lit("<html><body><p>Line one<br>"), F.col("text"), F.lit("</p></body></html>"),
     )
-    ext = extract_documents(inter, "boilerplate_strip_br")
+    ext = extract_html(_html_documents(_docs(spark, sf_dir), html), "boilerplate_strip_br")
     return explode_spans(ext).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "tag", "char_start_idx", "relative_start_pos",
@@ -348,16 +330,10 @@ def q_extract_config_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("<html><body><p>"), F.col("text"),
         F.lit("</p><script>var x=1;</script><footer>foot</footer></body></html>"),
     )
-    inter = docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.array(F.struct(
-            F.lit("html").alias("kind"), html.alias("text"),
-            F.lit("").alias("media_ref"), F.lit(0).alias("offset"),
-        )).alias("spans"),
-    )
+    pages = _html_documents(docs, html)
     out = None
     for cfg in ("keep_everything", "boilerplate_strip"):
-        ext = extract_documents(inter, cfg).select(
+        ext = extract_html(pages, cfg).select(
             F.lit(cfg).alias("config"),
             F.col("doc_id").cast("bigint").alias("doc_id"),
             "n_spans",
@@ -2233,18 +2209,7 @@ def q_extract_density_prune(spark, sf_dir):
         F.lit('</p></div><div class="short"><a href="/x">more</a></div>'
               '</body></html>'),
     )
-    wrapped = docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("html").alias("kind"),
-                html.alias("text"),
-                F.lit("").alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
-    )
-    ext = extract_documents(wrapped, "density_prune")
+    ext = extract_html(_html_documents(docs, html), "density_prune")
     return explode_spans(ext).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.col("tag"),

@@ -5,6 +5,10 @@ output column and every span field, per BASELINE.json input_hint)."""
 import pandas as pd
 import pytest
 
+from test_kernel_corpus import MAX_DOC_CHARS, SEED
+from test_kernel_corpus import N_DOCS as N_CORPUS_DOCS
+
+from mini_html_parser_spark import datagen
 from mini_html_parser_spark.datagen import generate_pandas
 from mini_html_parser_spark.kernel import boilerplate_strip_config, extract
 from mini_html_parser_spark.operators.extract import (
@@ -12,16 +16,48 @@ from mini_html_parser_spark.operators.extract import (
     EXTRACTED_SCHEMA,
     OUTPUT_SPAN_SCHEMA,
     assemble_html,
+    document_html,
     extract_documents,
     explode_spans,
 )
 
-N_DOCS = 40
+
+def _span(kind, text, media_ref, offset):
+    return {"kind": kind, "text": text, "media_ref": media_ref, "offset": offset}
+
+
+# rendering edge cases, run through every test below next to the
+# generated documents: duplicate and out-of-order offsets keep input
+# order, NULL fields render "", an empty or NULL array renders ""
+EDGE_DOCS = {
+    "edge-ties": [
+        _span("html", "</p></body></html>", "", 2),
+        _span("html", "<html><body><p>a", "", 0),
+        _span("html", " b", "", 1),
+        _span("media", "", "media://m1", 1),
+        _span("html", " c", "", 1),
+    ],
+    "edge-null-media-ref": [
+        _span("html", "<html><body><p>x ", "", 0),
+        _span("media", None, None, 1),
+        _span("html", "</p></body></html>", "", 2),
+    ],
+    "edge-null-kind-text": [
+        _span(None, "<html><body><p>k</p>", None, 0),
+        _span("html", None, "", 1),
+        _span("html", "</body></html>", "", 2),
+    ],
+    "edge-empty": [],
+    "edge-null": None,
+}
+N_GENERATED = 40
+N_DOCS = N_GENERATED + len(EDGE_DOCS)
 
 
 @pytest.fixture(scope="module")
 def docs_pdf():
-    return generate_pandas(N_DOCS, seed=42)
+    edge = pd.DataFrame({"doc_id": list(EDGE_DOCS), "spans": list(EDGE_DOCS.values())})
+    return pd.concat([generate_pandas(N_GENERATED, seed=42), edge], ignore_index=True)
 
 
 @pytest.fixture(scope="module")
@@ -63,7 +99,8 @@ def test_spark_matches_kernel(extracted, docs_pdf):
 
 def test_media_spans_preserved_in_order(extracted, docs_pdf):
     media_in = {
-        row["doc_id"]: [s["media_ref"] for s in sorted(row["spans"], key=lambda x: x["offset"])
+        row["doc_id"]: [s["media_ref"] or "" for s in sorted(row["spans"] or [],
+                                                             key=lambda x: x["offset"])
                         if s["kind"] == "media"]
         for _, row in docs_pdf.iterrows()
     }
@@ -93,6 +130,35 @@ def test_malformed_counter(spark):
     out = extract_documents(sdf, "keep_everything")
     rows = {r["doc_id"]: r["malformed"] for r in out.collect()}
     assert rows == {"good": False, "bad": True}
+
+
+def test_null_offset_and_null_span_keep_the_job(spark):
+    """A NULL offset next to another span sorts first and a NULL span
+    renders "": neither fails the job its document runs in."""
+    docs = [
+        ("good", [_span("html", "<html><body><p>ok</p></body></html>", "", 0)]),
+        ("null-offset", [_span("html", " two</p></body></html>", "", 1),
+                         _span("html", "<html><body><p>one", "", None)]),
+        ("null-span", [_span("html", "<html><body><p>x</p></body></html>", "", 0), None]),
+    ]
+    sdf = spark.createDataFrame(docs, schema=DOCUMENTS_SCHEMA)
+    got = {r["doc_id"]: r["text"] for r in extract_documents(sdf).collect()}
+    assert assemble_html(docs[1][1]) == "<html><body><p>one two</p></body></html>"
+    cfg = boilerplate_strip_config()
+    assert got == {d: extract(assemble_html(s), cfg).text for d, s in docs}
+    assert got["null-offset"] == "one two\n"
+
+
+def test_document_html_matches_assemble_html(spark):
+    """The Catalyst rendering equals its scalar reference over the
+    kernel corpus's generated documents (no UDF involved)."""
+    docs = [(str(i), datagen._doc_spans(SEED, i)) for i in range(N_CORPUS_DOCS)]
+    docs = [(d, s) for d, s in docs if len(assemble_html(s)) <= MAX_DOC_CHARS]
+    sdf = spark.createDataFrame(docs, schema=DOCUMENTS_SCHEMA)
+    got = dict(sdf.select("doc_id", document_html("spans")).collect())
+    assert len(got) == len(docs) > 250
+    for doc_id, spans in docs:
+        assert got[doc_id] == assemble_html(spans), doc_id
 
 
 def test_engine_parity_arrow_vs_pandas(spark, extracted, docs_pdf):
