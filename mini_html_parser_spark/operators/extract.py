@@ -125,11 +125,15 @@ def extract_documents(
     passthrough_cols: list[str] | None = None,
 ) -> DataFrame:
     """documents ``(doc_id, spans)`` → extracted: :func:`extract_html`
-    over each document's :func:`document_html`."""
-    passthrough = passthrough_cols or []
+    over each document's :func:`document_html`.
+
+    ``html`` replaces ``spans`` in place and every other input column
+    still reaches the UDF, so Catalyst prunes no column below an
+    upstream round-robin exchange, whose placement hashes whole rows
+    (pipeline.repartition_for_extraction)."""
     return extract_html(
-        df.select("doc_id", document_html("spans").alias("html"), *passthrough),
-        config, passthrough,
+        df.withColumn("html", document_html("spans")).drop("spans"),
+        config, passthrough_cols,
     )
 
 

@@ -151,12 +151,17 @@ def test_null_offset_and_null_span_keep_the_job(spark):
 
 def test_document_html_matches_assemble_html(spark):
     """The Catalyst rendering equals its scalar reference over the
-    kernel corpus's generated documents (no UDF involved)."""
+    kernel corpus's generated documents, giants (0.5-2 M chars) included,
+    and over one giant cut into ~900 spans listed in reverse offset order
+    (no UDF involved)."""
     docs = [(str(i), datagen._doc_spans(SEED, i)) for i in range(N_CORPUS_DOCS)]
-    docs = [(d, s) for d, s in docs if len(assemble_html(s)) <= MAX_DOC_CHARS]
+    giant = next(h for h in map(assemble_html, (s for _, s in docs)) if len(h) > MAX_DOC_CHARS)
+    cuts = range(0, len(giant), 1000)
+    docs.append(("many-spans", [_span("html", giant[c:c + 1000], "", c) for c in reversed(cuts)]))
     sdf = spark.createDataFrame(docs, schema=DOCUMENTS_SCHEMA)
     got = dict(sdf.select("doc_id", document_html("spans")).collect())
-    assert len(got) == len(docs) > 250
+    assert len(got) == len(docs) == N_CORPUS_DOCS + 1
+    assert got["many-spans"] == giant and len(cuts) > 500
     for doc_id, spans in docs:
         assert got[doc_id] == assemble_html(spans), doc_id
 
