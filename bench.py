@@ -390,6 +390,8 @@ def main() -> None:
         "queries": timings,
         "sf": SF_DIR,
         "cpus": CPUS,
+        # which worker import path the Python legs measured (None: pyspark.zip)
+        "python_daemon_module": spark.sparkContext.getConf().get("spark.python.daemon.module", None),
         "synth_docs": N_SYNTH_DOCS,
         **extras,
         "idle_gate": idle_gate,

@@ -17,6 +17,7 @@ MODULES = [
     "mini_html_parser_spark.operators.extract",
     "mini_html_parser_spark.sources.warc",
     "mini_html_parser_spark.streaming.extract_stream",
+    "mini_html_parser_spark.worker_daemon",
 ]
 
 
