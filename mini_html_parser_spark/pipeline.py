@@ -23,6 +23,7 @@ from __future__ import annotations
 import glob
 import os
 
+import py4j
 import pyspark
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
@@ -102,19 +103,20 @@ def build_session(
 def worker_daemon_module(master: str) -> str | None:
     """``spark.python.daemon.module`` for ``master``:
     :mod:`mini_html_parser_spark.worker_daemon` (workers import pyspark
-    from a directory instead of ``pyspark.zip``), or None to keep
-    Spark's own daemon.
+    and py4j from directories instead of Spark's archives), or None to
+    keep Spark's own daemon.
 
     Only for a ``local``/``local[…]`` master, whose workers use the
     driver's interpreter, cwd and ``PYTHONPATH`` (on a cluster the
     ``--py-files`` reach ``sys.path`` only per task, after the daemon
-    started), and only when the driver's pyspark — what a zip-free
-    worker imports — is a directory copy of SPARK_HOME's Spark version,
-    so a worker never runs another version than the JVM.
+    started), and only when the driver's pyspark and py4j — what an
+    archive-free worker imports — are directory copies, the pyspark one
+    of SPARK_HOME's Spark version, so a worker never runs another
+    version than the JVM.
     """
     if master != "local" and not master.startswith("local["):
         return None
-    if ".zip" in pyspark.__file__:
+    if ".zip" in pyspark.__file__ or ".zip" in py4j.__file__:
         return None
     core_jar = f"spark-core_*-{pyspark.__version__}.jar"
     if not glob.glob(os.path.join(_find_spark_home(), "jars", core_jar)):
@@ -176,9 +178,10 @@ def repartition_for_extraction(
     union: 48 s — the two filter branches scan the source twice;
     byte-balanced scan partitions, no shuffle: 35 s; round-robin:
     22 s).  Task counts stay at a few × parallelism on
-    purpose: a Python task costs ≈0.15 s of fixed overhead on
-    ``local[4]`` (a trivial ``mapInArrow`` over 16 vs 4 partitions),
-    so thousands of near-empty partitions would dominate wall-clock.
+    purpose: a Python task costs ≈0.065 s of fixed overhead on
+    ``local[4]`` with the archive-free worker daemon (a trivial
+    ``mapInArrow`` over 16 vs 4 partitions), so thousands of
+    near-empty partitions would dominate wall-clock.
     """
     n_buckets = n_buckets or parallelism * BUCKETS_PER_CORE
     return with_salt_bucket(df, n_buckets).repartition(n_buckets)
