@@ -327,7 +327,7 @@ def main() -> None:
 
         def run_warc():
             rows = read_warc(spark, warc_dir, repartition_files=n_seg)
-            docs = warc_documents(spark, warc_dir, warc_rows=rows)
+            docs = warc_documents(rows)
             ext = extract_html(docs, "boilerplate_strip")
             return ext.select(
                 F.count(F.lit(1)).alias("docs"),

@@ -75,17 +75,13 @@ def main(argv=None) -> int:
     if args.continuous and not args.streaming:
         p.error("--continuous requires --streaming")
 
-    from pyspark.sql import SparkSession
+    from mini_html_parser_spark import pipeline
 
-    builder = SparkSession.builder.appName("mini-html-parser-extract")
-    if args.iceberg_catalog:
-        from mini_html_parser_spark.pipeline import iceberg_configs
-
-        for k, v in iceberg_configs(
-            args.iceberg_catalog, args.iceberg_warehouse
-        ).items():
-            builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = pipeline.build_session(
+        app_name="mini-html-parser-extract",
+        iceberg_catalog=args.iceberg_catalog,
+        iceberg_warehouse=args.iceberg_warehouse,
+    )
 
     if args.streaming:
         from mini_html_parser_spark.operators.extract import extract_documents
@@ -119,56 +115,30 @@ def main(argv=None) -> int:
         }))
         return 0
 
-    from mini_html_parser_spark.pipeline import (
-        run_extraction_job,
-        run_pdf_extraction_job,
-        run_warc_extraction_job,
-    )
-
+    config = {} if args.input_format == "pdf" else {"config": args.config}
     if args.input_format == "warc":
-        result = run_warc_extraction_job(
-            spark, args.input, args.output, config=args.config,
-            parallelism=args.parallelism,
-            auto_compact_every=args.auto_compact_every,
-            mode=args.mode,
-        )
-        snap = result["snapshot"]
-        print(json.dumps({
-            "mode": "batch-warc",
-            "snapshot_id": snap["snapshot_id"] if snap else None,
-            "committed_rows": snap["total_rows"] if snap else 0,
-            "metrics": {k: int(v) for k, v in (result["metrics"] or {}).items()},
-            "warc_malformed_records": result.get("warc_malformed_records", 0),
-            "output": args.output,
-        }))
-        return 0
-
-    if args.iceberg_catalog and args.input.startswith(args.iceberg_catalog + "."):
-        documents = spark.table(args.input)  # catalog table swap-in
+        job, source = pipeline.run_warc_extraction_job, args.input
     else:
-        documents = spark.read.parquet(args.input)
-    if args.input_format == "pdf":
-        result = run_pdf_extraction_job(
-            spark, documents, args.output,
-            parallelism=args.parallelism,
-            auto_compact_every=args.auto_compact_every,
-            mode=args.mode,
-        )
-    else:
-        result = run_extraction_job(
-            spark, documents, args.output, config=args.config,
-            parallelism=args.parallelism,
-            auto_compact_every=args.auto_compact_every,
-            mode=args.mode,
-        )
+        job = (pipeline.run_pdf_extraction_job if args.input_format == "pdf"
+               else pipeline.run_extraction_job)
+        if args.iceberg_catalog and args.input.startswith(args.iceberg_catalog + "."):
+            source = spark.table(args.input)  # catalog table swap-in
+        else:
+            source = spark.read.parquet(args.input)
+    result = job(
+        spark, source, args.output, parallelism=args.parallelism,
+        auto_compact_every=args.auto_compact_every, mode=args.mode, **config,
+    )
     snap = result["snapshot"]
-    print(json.dumps({
-        "mode": "batch",
+    report = {
+        "mode": "batch-warc" if args.input_format == "warc" else "batch",
         "snapshot_id": snap["snapshot_id"] if snap else None,
         "committed_rows": snap["total_rows"] if snap else 0,
         "metrics": {k: int(v) for k, v in (result["metrics"] or {}).items()},
-        "output": args.output,
-    }))
+    }
+    if "warc_malformed_records" in result:
+        report["warc_malformed_records"] = result["warc_malformed_records"]
+    print(json.dumps({**report, "output": args.output}))
     return 0
 
 

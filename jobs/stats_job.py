@@ -34,9 +34,9 @@ def main(argv=None) -> int:
                         "dependency-free SVG under <output>/report")
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from mini_html_parser_spark.pipeline import build_session
 
-    spark = SparkSession.builder.appName("mini-html-parser-stats").getOrCreate()
+    spark = build_session(app_name="mini-html-parser-stats")
 
     from mini_html_parser_spark.operators.stats import (
         stats_per_doc_table, tag_stats,

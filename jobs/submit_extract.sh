@@ -3,8 +3,8 @@
 # job against a real cluster + Iceberg catalog.  Everything below is
 # plain Spark/Iceberg wiring; swap the mock values (yarn, s3a bucket,
 # catalog name `lake`) for your environment.  Offline this sandbox has
-# no cluster or Iceberg jar — the command is exercised up to the
-# argparse/config seam by tests/test_sources.py::test_extract_job_cli.
+# no cluster or Iceberg jar; tests/test_session.py runs extract_job.py
+# under `spark-submit --master local[2]` instead.
 set -euo pipefail
 
 ENGINE_ZIP=${ENGINE_ZIP:-/tmp/engine.zip}
@@ -17,8 +17,8 @@ python tools/package_pyfiles.py "$ENGINE_ZIP"
 
 # 2. submit.  The same iceberg confs are available programmatically via
 #    mini_html_parser_spark.pipeline.iceberg_configs("$CATALOG", ...)
-#    (extract_job.py applies them itself when --iceberg-catalog is
-#    passed, so the --conf lines are optional belt-and-braces).
+#    (extract_job.py's build_session fills them in when
+#    --iceberg-catalog is passed; a --conf given here wins).
 exec spark-submit \
   --master yarn --deploy-mode cluster \
   --py-files "$ENGINE_ZIP" \

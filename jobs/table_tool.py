@@ -285,10 +285,10 @@ def main(argv=None) -> int:
     # compact/delete/dedup: need a session for data-file work
     from mini_html_parser_spark.pipeline import build_session
 
-    # getOrCreate: reuses an existing in-process session (tests) or
-    # builds one (CLI).  Deliberately NOT stopped here — a borrowed
-    # session must survive the call; a CLI-owned one dies with the
-    # process.
+    # build_session returns an active in-process session (tests)
+    # unchanged, or builds one (CLI).  Deliberately NOT stopped here —
+    # a borrowed session must survive the call; a CLI-owned one dies
+    # with the process.
     spark = build_session(app_name=f"icelite-{args.command}")
     spark.sparkContext.setLogLevel("ERROR")
 

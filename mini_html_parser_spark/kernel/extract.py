@@ -704,14 +704,7 @@ def extract(html_str: str, cfg: ExtractionConfig | None = None) -> ExtractResult
     Public scalar entry point — the analogue of the reference's
     ``get_clean_text_and_metadata`` (html_parser.py:610-639).
     """
-    if cfg is None:
-        cfg = ExtractionConfig()
-    if sys.getrecursionlimit() < _MIN_RECURSION:
-        sys.setrecursionlimit(_MIN_RECURSION)
-    try:
-        return _Extractor(cfg).run(html_str)
-    except RecursionError:
-        return ExtractResult("", [], malformed=True)
+    return make_extract_fn(cfg)(html_str)
 
 
 def make_extract_fn(cfg: ExtractionConfig | None = None):

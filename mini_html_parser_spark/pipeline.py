@@ -25,6 +25,7 @@ import os
 
 import py4j
 import pyspark
+from pyspark import SparkConf, SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
@@ -66,37 +67,51 @@ def build_session(
     iceberg_catalog: str | None = None,
     iceberg_warehouse: str | None = None,
 ) -> SparkSession:
-    """Session factory.  ``master`` defaults to
-    ``local[$SPARK_GRAFT_CPUS]``, else one core per CPU of the machine.
+    """The session factory of every entry point: tests, benchmarks,
+    tools and the spark-submit jobs.
 
-    ``iceberg_catalog``/``iceberg_warehouse`` wire a real Iceberg
-    Hadoop catalog on clusters that ship the runtime jar
-    (``--packages org.apache.iceberg:iceberg-spark-runtime-...``);
-    offline, the icelite layer (plans/icelite.py) provides the same
-    snapshot/resume semantics over plain parquet.
+    An already-active session is returned unchanged: its SparkConf is
+    fixed, and re-applying SQL confs would rewrite its owner's session.
 
-    The Python worker daemon is :func:`worker_daemon_module`'s choice,
-    made here because it is a SparkConf, fixed once the context starts.
+    Engine settings: Arrow with ``ARROW_MAX_RECORDS`` per batch, AQE
+    with skew join, ``shuffle_partitions`` and, on clusters that ship
+    the runtime jar, :func:`iceberg_configs`.  Under spark-submit
+    (only there is ``PYSPARK_GATEWAY_PORT`` set before the gateway
+    starts) the settings it was given win, ``--master`` and every
+    ``--conf`` included; the engine settings fill in the keys it left
+    unset.  Otherwise this function picks the master (``master``, else
+    ``local[$SPARK_GRAFT_CPUS]``, else one core per CPU), the driver
+    memory (``SPARK_DRIVER_MEMORY``, default 8g), no UI and
+    :func:`worker_daemon_module`'s Python worker daemon.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
-    master = master or f"local[{cpus}]"
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
-    )
-    daemon = worker_daemon_module(master)
-    if daemon:
-        builder = builder.config("spark.python.daemon.module", daemon)
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
+    confs = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_MAX_RECORDS),
+    }
     if iceberg_catalog:
-        for k, v in iceberg_configs(iceberg_catalog, iceberg_warehouse).items():
-            builder = builder.config(k, v)
+        confs.update(iceberg_configs(iceberg_catalog, iceberg_warehouse))
+    builder = SparkSession.builder.appName(app_name)
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        SparkContext._ensure_initialized()
+        given = SparkConf()
+        confs = {k: v for k, v in confs.items() if not given.contains(k)}
+    else:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
+        master = master or f"local[{cpus}]"
+        builder = builder.master(master)
+        confs["spark.driver.memory"] = os.environ.get("SPARK_DRIVER_MEMORY", "8g")
+        confs["spark.ui.enabled"] = "false"
+        daemon = worker_daemon_module(master)
+        if daemon:
+            confs["spark.python.daemon.module"] = daemon
+    for k, v in confs.items():
+        builder = builder.config(k, v)
     return builder.getOrCreate()
 
 
@@ -126,14 +141,13 @@ def worker_daemon_module(master: str) -> str | None:
 
 def iceberg_configs(catalog: str, warehouse: str | None = None) -> dict[str, str]:
     """The Spark confs that wire an Iceberg Hadoop catalog named
-    ``catalog`` — usable from :func:`build_session`, from a job
-    script's own builder, or spelled as ``--conf`` pairs on
-    spark-submit (see jobs/submit_extract.sh).  The runtime jar comes
-    from ``--packages org.apache.iceberg:iceberg-spark-runtime-<spark
-    version>_<scala version>:<iceberg version>``; offline this sandbox
-    has no jar, so the seam is config-only and icelite
-    (plans/icelite.py) provides the snapshot/resume semantics over
-    plain parquet."""
+    ``catalog`` — applied by :func:`build_session`, or spelled as
+    ``--conf`` pairs on spark-submit (see jobs/submit_extract.sh).
+    The runtime jar comes from ``--packages
+    org.apache.iceberg:iceberg-spark-runtime-<spark version>_<scala
+    version>:<iceberg version>``; offline, with no jar, the seam is
+    config-only and icelite (plans/icelite.py) provides the
+    snapshot/resume semantics over plain parquet."""
     return {
         "spark.sql.extensions":
             "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions",
@@ -333,17 +347,11 @@ def _run_job(
     return {"snapshot": snapshot, "metrics": metrics}
 
 
-def warc_documents(
-    spark: SparkSession, warc_path: str, warc_rows: DataFrame | None = None
-) -> DataFrame:
-    """WARC crawl segments → ``(doc_id, html)`` (doc_id = target URI,
-    one row per response record) — the adapter between
-    :func:`sources.warc.read_warc` and
+def warc_documents(warc_rows: DataFrame) -> DataFrame:
+    """:func:`sources.warc.read_warc`'s rows → ``(doc_id, html)``
+    (doc_id = target URI, one row per response record) — the adapter
+    between the WARC reader and
     :func:`~.operators.extract.extract_html`."""
-    from .sources.warc import read_warc
-
-    if warc_rows is None:
-        warc_rows = read_warc(spark, warc_path)
     rows = warc_rows.filter(F.col("url").isNotNull())
     return rows.select(F.col("url").alias("doc_id"), "html")
 
@@ -378,7 +386,7 @@ def run_warc_extraction_job(
         F.collect_set(F.struct("warc_file", "file_malformed")).alias("files"),
     )
     result = _run_job(
-        spark, warc_documents(spark, warc_path, warc_rows=warc_rows), output_path,
+        spark, warc_documents(warc_rows), output_path,
         lambda pending: extract_html(pending, config, passthrough_cols=["bucket"]),
         parallelism, auto_compact_every, mode,
     )

@@ -3357,6 +3357,7 @@ ORACLE_BM25_TOPK = r"""
 WITH toks AS (
   SELECT doc_id, string_split_regex(trim(text), '[ \t\n\r\f\x0b]+') AS arr
   FROM documents
+  WHERE text IS NOT NULL
 ),
 dl AS (SELECT doc_id, CAST(len(arr) AS BIGINT) AS dl FROM toks),
 stats AS (
@@ -3460,6 +3461,7 @@ ORACLE_TFIDF_TOP_TERMS = r"""
 WITH toks AS (
   SELECT doc_id, string_split_regex(trim(text), '[ \t\n\r\f\x0b]+') AS arr
   FROM documents
+  WHERE text IS NOT NULL
 ),
 dl AS (SELECT doc_id, CAST(len(arr) AS BIGINT) AS dl FROM toks),
 stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM dl),
@@ -3563,6 +3565,7 @@ WITH queries(query_id, query) AS (
 toks AS (
   SELECT doc_id, string_split_regex(trim(text), '[ \t\n\r\f\x0b]+') AS arr
   FROM documents
+  WHERE text IS NOT NULL
 ),
 dl AS (SELECT doc_id, CAST(len(arr) AS BIGINT) AS dl FROM toks),
 stats AS (
