@@ -77,7 +77,9 @@ def main() -> None:
     from mini_html_parser_spark.datagen import generate_documents
     from mini_html_parser_spark.operators.extract import extract_documents, extract_html
     from mini_html_parser_spark.operators import stats
-    from mini_html_parser_spark.pipeline import build_session, repartition_for_extraction
+    from mini_html_parser_spark.pipeline import (
+        build_session, repartition_for_extraction, session_report,
+    )
     from mini_html_parser_spark.queries import (
         q_extract_flagship,
         q_join_broadcast_revenue,
@@ -391,7 +393,7 @@ def main() -> None:
         "sf": SF_DIR,
         "cpus": CPUS,
         # which worker import path the Python legs measured (None: pyspark.zip)
-        "python_daemon_module": spark.sparkContext.getConf().get("spark.python.daemon.module", None),
+        "python_daemon_module": session_report(spark)["daemon"],
         "synth_docs": N_SYNTH_DOCS,
         **extras,
         "idle_gate": idle_gate,

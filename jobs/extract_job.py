@@ -112,6 +112,7 @@ def main(argv=None) -> int:
             "sink": args.streaming_sink,
             "trigger": "continuous" if args.continuous else "availableNow",
             "output": args.output,
+            "session": pipeline.session_report(spark),
         }))
         return 0
 
@@ -138,7 +139,10 @@ def main(argv=None) -> int:
     }
     if "warc_malformed_records" in result:
         report["warc_malformed_records"] = result["warc_malformed_records"]
-    print(json.dumps({**report, "output": args.output}))
+    print(json.dumps({
+        **report, "output": args.output,
+        "session": pipeline.session_report(spark),
+    }))
     return 0
 
 

@@ -136,22 +136,6 @@ class _DomParser(HTMLParser):
             return self._ensure_head()
         return self._ensure_body()
 
-    def _append_text(self, data: str):
-        cur = self._cur()
-        if cur is self.root:
-            # text at html level: whitespace before body is dropped,
-            # other text force-opens body (libxml2 behavior)
-            if self.body is None and not data.strip():
-                return
-            cur = self._ensure_body()
-            if self.body not in self.stack:
-                self.stack.append(self.body)
-        if cur.children:
-            last = cur.children[-1]
-            last.tail = (last.tail or "") + data
-        else:
-            cur.text = (cur.text or "") + data
-
     # -- HTMLParser hooks ----------------------------------------------------
     def handle_starttag(self, tag, attrs):
         if tag == "html":
@@ -250,12 +234,12 @@ class _DomParser(HTMLParser):
         self.malformed = True
 
     def handle_data(self, data):
-        # _append_text inlined (hottest text path: one call and one
-        # stack probe saved per text run)
         if not data:
             return
         cur = self.stack[-1]
         if cur is self.root:
+            # text at html level: whitespace before body is dropped,
+            # other text force-opens body (libxml2 behavior)
             if self.body is None and not data.strip():
                 return
             cur = self._ensure_body()

@@ -115,6 +115,22 @@ def build_session(
     return builder.getOrCreate()
 
 
+def session_report(spark: SparkSession) -> dict:
+    """What a session runs with, for job and bench reports: master,
+    default parallelism, Arrow batch cap, shuffle partitions and the
+    Python worker daemon module (None: Spark's own daemon)."""
+    sc = spark.sparkContext
+    return {
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "arrow_max_records": int(
+            spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+        ),
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+        "daemon": sc.getConf().get("spark.python.daemon.module", None),
+    }
+
+
 def worker_daemon_module(master: str) -> str | None:
     """``spark.python.daemon.module`` for ``master``:
     :mod:`mini_html_parser_spark.worker_daemon` (workers import pyspark

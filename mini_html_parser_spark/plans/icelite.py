@@ -18,9 +18,11 @@ Layout::
     <table>/_icelite/schema-<k>.json  (schema versions, id-based
                                     column mapping; never removed)
 
-A manifest records: snapshot id, parent id, data dir + file list,
-committed buckets, per-bucket row counts (lineage), schema id, and
-job-level metrics.  Readers scan the manifests' file lists; a
+A manifest records: snapshot id, parent id, data dir + file list
+(``data_files``, ``[]`` for commits without data), committed buckets,
+per-bucket row counts (lineage), schema id, and job-level metrics.
+Readers scan the manifests' file lists and refuse a manifest without
+one (there is one manifest format, no directory walk); a
 crashed or lost-race write never commits (its dir stays
 unreferenced).  Resume = anti-join of input buckets against the
 committed bucket set — no per-row bookkeeping.  Concurrent commits
@@ -48,6 +50,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 import uuid
 
 from pyspark.sql import DataFrame, functions as F
@@ -167,87 +170,83 @@ class IceliteTable:
         except ValueError:
             return None
 
+    def _load_manifests(self, tail_only: bool) -> list[dict]:
+        """Manifests in sequence order: the newest metadata CHECKPOINT
+        (see :meth:`checkpoint`) plus the ``snap-`` files — with
+        ``tail_only``, only those STRICTLY NEWER than the checkpoint;
+        otherwise every one on disk (a file overrides its folded copy).
+
+        A concurrent compact()/checkpoint() can remove a listed file
+        between listdir and open.  Removal only starts AFTER the
+        superseding file is durable, so a re-list sees the complete
+        history: the scan retries after a short backoff, and raises if
+        it is STILL torn after the budget instead of returning a
+        partial view that could silently miss committed data (ADVICE
+        r5, medium).
+
+        Every writer records ``data_files`` (``[]`` for delete-only
+        and rollback commits); a manifest without it is refused."""
+        if not os.path.isdir(self.manifest_dir):
+            return []
+
+        def load(name):
+            with open(os.path.join(self.manifest_dir, name)) as f:
+                return json.load(f)
+
+        for attempt in range(5):
+            if attempt:
+                time.sleep(0.05 * attempt)
+            names = os.listdir(self.manifest_dir)
+            ckpts = [
+                (s, n) for n in names
+                if (s := self._name_seq(n, "ckpt-")) is not None
+            ]
+            ckpt_seq, by_seq = -1, {}
+            try:
+                if ckpts:
+                    ckpt_seq, name = max(ckpts)
+                    for m in load(name)["snapshots"]:
+                        by_seq[m["sequence"]] = m
+                for n in names:
+                    seq = self._name_seq(n, "snap-")
+                    if seq is not None and not (tail_only and seq <= ckpt_seq):
+                        by_seq[seq] = load(n)
+            except FileNotFoundError:
+                continue  # superseded mid-scan; re-list
+            for seq, m in by_seq.items():
+                if "data_files" not in m:
+                    raise ValueError(
+                        f"icelite table {self.path}: manifest "
+                        f"snap-{seq:06d}.json records no data_files"
+                    )
+            return [by_seq[k] for k in sorted(by_seq)]
+        raise RuntimeError(
+            f"icelite table {self.path}: manifest scan still incomplete "
+            "after 5 attempts (a concurrent compact() or checkpoint() is "
+            "removing superseded metadata faster than we can list); retry"
+        )
+
     def snapshots(self) -> list[dict]:
-        """Active manifests, in sequence order.
+        """Active manifests, in sequence order (see :meth:`_live_chain`).
 
         Reads the newest metadata CHECKPOINT (see :meth:`checkpoint`)
         plus only the manifests STRICTLY NEWER than it — O(tail) file
         opens per call instead of O(#commits), which on a years-lived
         table (10^5 micro-batch commits) is the difference between
-        one small read and opening every commit ever made.
+        one small read and opening every commit ever made."""
+        return self._live_chain(self._load_manifests(tail_only=True))
+
+    @staticmethod
+    def _live_chain(snaps: list[dict]) -> list[dict]:
+        """The live view of a manifest chain in sequence order.
 
         A ``compacted`` manifest SUPERSEDES everything below its
         sequence: older manifests are invisible even if still on disk,
         so a crash between writing the compacted manifest and removing
         the superseded ones can never double-count rows (ADVICE r2,
         medium — the remove loop is cleanup, not a correctness step).
-        """
-        if not os.path.isdir(self.manifest_dir):
-            return []
-        # a concurrent compact()/checkpoint() can remove superseded
-        # manifests (or a superseded checkpoint) between our listdir
-        # and open.  Removal only starts AFTER the superseding file is
-        # durable, so on a re-list the history is complete — retry the
-        # scan rather than returning a partial (gap-sequenced) view.
-        # A short backoff between attempts lets the remover finish its
-        # loop; if the scan is STILL incomplete after the budget, raise
-        # instead of returning a partial view that could silently miss
-        # committed data (ADVICE r5, medium).
-        import time as _time
 
-        complete = False
-        for attempt in range(5):
-            if attempt:
-                _time.sleep(0.05 * attempt)
-            names = os.listdir(self.manifest_dir)
-            complete = True
-            snaps: list[dict] = []
-            ckpt_seq = -1
-            ckpts = [
-                (s, n) for n in names
-                if (s := self._name_seq(n, "ckpt-")) is not None
-            ]
-            if ckpts:
-                seq, name = max(ckpts)
-                try:
-                    with open(os.path.join(self.manifest_dir, name)) as f:
-                        ckpt_seq = seq
-                        snaps = json.load(f)["snapshots"]
-                except FileNotFoundError:
-                    complete = False  # superseded mid-scan; re-list
-            if complete:
-                tail = sorted(
-                    (s, n) for n in names
-                    if (s := self._name_seq(n, "snap-")) is not None
-                    and s > ckpt_seq
-                )
-                for _seq, name in tail:
-                    try:
-                        with open(os.path.join(self.manifest_dir, name)) as f:
-                            snaps.append(json.load(f))
-                    except FileNotFoundError:
-                        complete = False
-                        break
-            if complete:
-                break
-        if not complete:
-            raise RuntimeError(
-                f"icelite table {self.path}: manifest scan still "
-                "incomplete after 5 attempts (a concurrent compact() or "
-                "checkpoint() is removing superseded metadata faster than "
-                "we can list); retry the read"
-            )
-        snaps.sort(key=lambda s: s["sequence"])
-        floor = max(
-            (s["sequence"] for s in snaps if s.get("compacted")), default=None
-        )
-        if floor is not None:
-            snaps = [s for s in snaps if s["sequence"] >= floor]
-        return self._apply_rollbacks(snaps)
-
-    @staticmethod
-    def _apply_rollbacks(snaps: list[dict]) -> list[dict]:
-        """Fold ``rollback`` manifests into the live chain: a rollback
+        ``rollback`` manifests then fold into the chain: a rollback
         at sequence R targeting sequence T truncates every snapshot in
         (T, R) from the view — the state becomes exactly "as of T",
         and later commits build on that (Iceberg's
@@ -259,8 +258,13 @@ class IceliteTable:
         nothing by itself — its target is resolved against the chain
         as it stood when it committed, which ascending replay
         reproduces)."""
+        floor = max(
+            (s["sequence"] for s in snaps if s.get("compacted")), default=-1
+        )
         live: list[dict] = []
         for s in snaps:
+            if s["sequence"] < floor:
+                continue
             tgt = s.get("rollback_to")
             if tgt is not None:
                 live = [x for x in live if x["sequence"] <= tgt]
@@ -506,93 +510,6 @@ class IceliteTable:
             )
         return published
 
-    def _read_with_schema(
-        self,
-        spark,
-        snaps: list[dict],
-        buckets: set[int] | None = None,
-        prune: list[tuple] | None = None,
-        file_filter=None,
-        drop: dict[str, int] | None = None,
-    ) -> DataFrame | None:
-        """One scan per DISTINCT schema version among ``snaps`` (not
-        per snapshot — plan size stays O(schema versions), which is
-        O(1) in practice since evolutions are rare), each projected to
-        the current schema by field id, then unioned by name.  Returns
-        None when the table predates schema tracking (caller falls
-        back to the raw flat read).
-
-        ``prune`` drops files whose recorded column bounds cannot
-        satisfy the predicates (see :meth:`read`); predicate column
-        names are CURRENT names, mapped to each schema version's
-        write-time physical names by field id."""
-        all_schemas = self.schemas()
-        schemas = {s["schema_id"]: s for s in all_schemas}
-        if not schemas:
-            return None
-        current = self.current_schema()
-        # snapshots that PREDATE schema tracking were written with the
-        # physical names of the OLDEST registered schema (v0 is always
-        # derived from the same job's frame that also wrote them) —
-        # defaulting to the CURRENT id would project post-evolution
-        # names onto pre-evolution files and fail the read
-        legacy_sid = all_schemas[0]["schema_id"]
-        keep = {f"bucket={b}" for b in buckets} if buckets is not None else None
-        cur_ids = {f["name"]: f["id"] for f in current["fields"]}
-        by_schema: dict[int, list[str]] = {}
-        for s in snaps:
-            sid = s.get("schema_id", legacy_sid)
-            files = self._live_files(s, drop)
-            if keep is not None:
-                files = [
-                    f for f in files
-                    if any(part in keep for part in f.split(os.sep))
-                ]
-            if prune:
-                phys = {f["id"]: f["name"] for f in schemas[sid]["fields"]}
-                rename = {
-                    name: phys[fid]
-                    for name, fid in cur_ids.items()
-                    if fid in phys
-                }
-                fstats = s.get("file_stats") or {}
-                files = [
-                    f for f in files
-                    if _file_may_match(
-                        fstats.get(os.path.relpath(f, self.path)), prune, rename
-                    )
-                ]
-            if file_filter is not None:
-                files = [f for f in files if file_filter(f)]
-            if files:
-                by_schema.setdefault(sid, []).extend(files)
-        if not by_schema:
-            return None
-        parts = []
-        for sid, files in sorted(by_schema.items()):
-            write_names = {
-                f["id"]: f["name"] for f in schemas[sid]["fields"]
-            }
-            df = spark.read.parquet(*files)
-            cols = []
-            for f in current["fields"]:
-                phys = write_names.get(f["id"])
-                if phys is not None:
-                    cols.append(F.col(phys).alias(f["name"]))
-                else:
-                    # column added after this snapshot was written
-                    cols.append(F.lit(None).cast(f["type"]).alias(f["name"]))
-            cols.append(
-                F.regexp_extract(
-                    F.input_file_name(), r"bucket=(\d+)", 1
-                ).cast("int").alias("bucket")
-            )
-            parts.append(df.select(*cols))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
     def partitioning(self) -> dict | None:
         """The bucket-layout the table was first committed with.
 
@@ -644,7 +561,7 @@ class IceliteTable:
                 s.get("parent_id"),
                 self._snapshot_kind(s),
                 int(s.get("total_rows") or 0),
-                len(s.get("data_files") or []),
+                len(s["data_files"]),
                 int(s.get("delete_count") or 0),
                 s.get("schema_id"),
             )
@@ -818,13 +735,11 @@ class IceliteTable:
                     "not found among active snapshots"
                 )
             target = match[0]
-        import time as _time
-
         rec = {
             "name": name,
             "snapshot_id": target["snapshot_id"],
             "sequence": target["sequence"],
-            "created_at": _time.time(),
+            "created_at": time.time(),
         }
         tmp = os.path.join(
             self.manifest_dir, f".tag-{name}-{uuid.uuid4().hex}.json.tmp"
@@ -859,7 +774,7 @@ class IceliteTable:
         mis-configured extraction run): METADATA-ONLY, no data moves,
         no rewrite.  Commits a ``rollback`` manifest whose
         ``rollback_to`` sequence truncates every later snapshot from
-        the live view (see :meth:`_apply_rollbacks`); subsequent
+        the live view (see :meth:`_live_chain`); subsequent
         commits build on the restored state.
 
         Contracts (each pinned in tests/test_icelite.py):
@@ -910,68 +825,18 @@ class IceliteTable:
             "rollback_to_id": target["snapshot_id"],
             "metrics": {**(metrics or {}), "rolled_back_from": tip["sequence"]},
             "partitioning": target.get("partitioning"),
+            "schema_id": self._committed_schemas()[-1]["schema_id"],
         }
-        schema = self.current_schema()
-        if schema is not None:
-            manifest["schema_id"] = schema["schema_id"]
         return self._commit_manifest(manifest)
 
     def _all_manifests(self) -> list[dict]:
         """Every manifest on disk or folded into the newest checkpoint,
         floor filter NOT applied — the raw history tag resolution walks
         (pinned manifests below a compaction floor are invisible to
-        snapshots() but still resolvable here)."""
-        if not os.path.isdir(self.manifest_dir):
-            return []
-        # Same torn-listing discipline as snapshots() (ADVICE r5,
-        # medium): a concurrent checkpoint()/compact() can remove a
-        # listed file between listdir and open.  Swallowing the miss
-        # would return a silently-incomplete history — and
-        # publish_branch's foreign-commit safety check and
-        # read(tag=...) both consume THIS view, so a partial answer
-        # here can wrongly pass a fast-forward conflict check.
-        # Re-list (files legitimately expired vanish from the next
-        # listing; history folded into a newer checkpoint reappears
-        # from that checkpoint) and raise if still torn.
-        import time as _time
-
-        for attempt in range(5):
-            if attempt:
-                _time.sleep(0.05 * attempt)
-            by_seq: dict[int, dict] = {}
-            names = os.listdir(self.manifest_dir)
-            complete = True
-            ckpts = [
-                (s, n) for n in names
-                if (s := self._name_seq(n, "ckpt-")) is not None
-            ]
-            if ckpts:
-                _seq, name = max(ckpts)
-                try:
-                    with open(os.path.join(self.manifest_dir, name)) as f:
-                        for s in json.load(f)["snapshots"]:
-                            by_seq[s["sequence"]] = s
-                except FileNotFoundError:
-                    complete = False  # superseded mid-scan; re-list
-            if complete:
-                for n in names:
-                    seq = self._name_seq(n, "snap-")
-                    if seq is None:
-                        continue
-                    try:
-                        with open(os.path.join(self.manifest_dir, n)) as f:
-                            by_seq[seq] = json.load(f)
-                    except FileNotFoundError:
-                        complete = False
-                        break
-            if complete:
-                return [by_seq[k] for k in sorted(by_seq)]
-        raise RuntimeError(
-            f"icelite table {self.path}: raw manifest scan still "
-            "incomplete after 5 attempts (a concurrent compact() or "
-            "checkpoint() is removing superseded metadata faster than "
-            "we can list); retry the operation"
-        )
+        snapshots() but still resolvable here).  publish_branch's
+        fast-forward check and read(tag=...) consume this view, so it
+        keeps the same torn-listing discipline as snapshots()."""
+        return self._load_manifests(tail_only=False)
 
     def _pinned_manifests(self) -> list[dict]:
         """Manifests a tag keeps alive: everything at or below the
@@ -1153,25 +1018,15 @@ class IceliteTable:
 
     # ---- read / resume -----------------------------------------------------
     def _snapshot_files(self, snap: dict) -> list[str]:
-        """Data files of one snapshot — from the manifest when recorded
-        (Iceberg-style: no storage listing on the read path), else a
-        one-time directory walk for pre-data_files manifests."""
-        rel = snap.get("data_files")
-        if rel is not None:
-            return [os.path.join(self.path, p) for p in rel]
-        files = []
-        for root, _dirs, names in os.walk(snap["data_dir"]):
-            files.extend(
-                os.path.join(root, n) for n in names if n.endswith(".parquet")
-            )
-        return files
+        """Data files of one snapshot, from its manifest (Iceberg-style:
+        no storage listing on the read path)."""
+        return [os.path.join(self.path, p) for p in snap["data_files"]]
 
     @staticmethod
     def _data_manifests(snaps: list[dict]) -> list[dict]:
-        """Manifests that carry data files.  Legacy manifests (no
-        ``data_files`` key) always do (directory walk); delete-only
-        manifests record ``data_files: []`` explicitly."""
-        return [s for s in snaps if s.get("data_files") is None or s["data_files"]]
+        """Manifests that carry data files (delete-only and rollback
+        manifests record ``data_files: []``)."""
+        return [s for s in snaps if s["data_files"]]
 
     @staticmethod
     def _replaced_map(snaps: list[dict]) -> dict[str, int]:
@@ -1206,13 +1061,23 @@ class IceliteTable:
     def _delete_manifests(snaps: list[dict]) -> list[dict]:
         return [s for s in snaps if s.get("delete_files")]
 
-    def _empty_frame(self, spark) -> DataFrame | None:
+    def _committed_schemas(self) -> list[dict]:
+        """:meth:`schemas` of a table that has snapshots.  Every writer
+        registers schema v0 before the first manifest, so a committed
+        table without a schema file is refused rather than guessed at."""
+        schemas = self.schemas()
+        if not schemas:
+            raise ValueError(
+                f"icelite table {self.path} has snapshots but no "
+                "_icelite/schema-*.json"
+            )
+        return schemas
+
+    def _empty_frame(self, spark) -> DataFrame:
         """Zero-row frame in the table's CURRENT schema (+ the bucket
         lineage column) — the readable state of a fully-deleted,
         compacted table."""
-        cur = self.current_schema()
-        if cur is None:
-            return None
+        cur = self._committed_schemas()[-1]
         ddl = ", ".join(f"`{f['name']}` {f['type']}" for f in cur["fields"])
         return spark.createDataFrame([], schema=ddl + ", `bucket` int")
 
@@ -1225,48 +1090,80 @@ class IceliteTable:
         file_filter=None,
         drop: dict[str, int] | None = None,
     ) -> DataFrame | None:
-        """One flat scan over the data files of ``snaps`` — schema-aware
-        when the table tracks schemas — with manifest-level bucket and
-        column-stats file pruning, files superseded by a newer
-        ``rewrite`` excluded (``drop`` lets a caller that SPLIT the
-        snapshot set — e.g. _read_snaps' delete-signature groups —
-        supply the replacement map of the WHOLE read; computing it
-        from a subset would miss a rewrite sitting in another group).
+        """One scan per DISTINCT schema version among the data files of
+        ``snaps`` (not per snapshot — plan size stays O(schema
+        versions), which is O(1) in practice since evolutions are
+        rare), each projected to the current schema by field id plus
+        the ``bucket`` lineage column, then unioned by name.
+
+        A manifest's files enter the scan unless a NEWER ``rewrite``
+        replaced them (``drop`` lets a caller that SPLIT the snapshot
+        set — e.g. _read_snaps' delete-signature groups — supply the
+        replacement map of the WHOLE read; computing it from a subset
+        would miss a rewrite sitting in another group), their path
+        bucket (:meth:`_file_bucket`) is outside ``buckets``, their
+        recorded column bounds cannot satisfy ``prune`` (predicate
+        names are CURRENT names, mapped to each version's write-time
+        physical names by field id), or the Bloom ``file_filter``
+        rejects them.  A data manifest without ``schema_id`` was
+        written with the OLDEST schema's physical names (v0 is always
+        derived from the same job's frame that also wrote them).
         Returns None when no file survives."""
+        schemas = self._committed_schemas()
+        current = schemas[-1]
+        phys_by_sid = {
+            s["schema_id"]: {f["id"]: f["name"] for f in s["fields"]}
+            for s in schemas
+        }
+        legacy_sid = schemas[0]["schema_id"]
+        cur_ids = {f["name"]: f["id"] for f in current["fields"]}
         if drop is None:
             drop = self._replaced_map(snaps)
-        sdf = self._read_with_schema(
-            spark, snaps, buckets, prune, file_filter, drop
-        )
-        if sdf is not None:
-            return sdf
-        keep = {f"bucket={b}" for b in buckets} if buckets is not None else None
-        files: list[str] = []
+        by_schema: dict[int, list[str]] = {}
         for s in snaps:
-            fs = self._live_files(s, drop)
-            if keep is not None:
-                fs = [
-                    f for f in fs
-                    if any(part in keep for part in f.split(os.sep))
+            sid = s.get("schema_id", legacy_sid)
+            phys = phys_by_sid[sid]
+            files = self._live_files(s, drop)
+            if buckets is not None:
+                files = [
+                    f for f in files
+                    if self._file_bucket(os.path.relpath(f, self.path))
+                    in buckets
                 ]
             if prune:
+                rename = {
+                    name: phys[fid]
+                    for name, fid in cur_ids.items()
+                    if fid in phys
+                }
                 fstats = s.get("file_stats") or {}
-                fs = [
-                    f for f in fs
+                files = [
+                    f for f in files
                     if _file_may_match(
-                        fstats.get(os.path.relpath(f, self.path)), prune, {}
+                        fstats.get(os.path.relpath(f, self.path)), prune, rename
                     )
                 ]
             if file_filter is not None:
-                fs = [f for f in fs if file_filter(f)]
-            files.extend(fs)
-        if not files:
-            return None
-        df = spark.read.parquet(*files)
-        return df.withColumn(
-            "bucket",
-            F.regexp_extract(F.input_file_name(), r"bucket=(\d+)", 1).cast("int"),
-        )
+                files = [f for f in files if file_filter(f)]
+            if files:
+                by_schema.setdefault(sid, []).extend(files)
+        out = None
+        for sid, files in sorted(by_schema.items()):
+            phys = phys_by_sid[sid]
+            cols = [
+                F.col(phys[f["id"]]).alias(f["name"]) if f["id"] in phys
+                # column added after this snapshot was written
+                else F.lit(None).cast(f["type"]).alias(f["name"])
+                for f in current["fields"]
+            ]
+            cols.append(
+                F.regexp_extract(
+                    F.input_file_name(), r"bucket=(\d+)", 1
+                ).cast("int").alias("bucket")
+            )
+            part = spark.read.parquet(*files).select(*cols)
+            out = part if out is None else out.unionByName(part)
+        return out
 
     def _current_name_for(self, name: str, schema_id) -> str:
         """Map a WRITE-TIME column name to the current schema name via
@@ -1274,13 +1171,11 @@ class IceliteTable:
         read path uses).  Without this, renaming the delete-key column
         would brick every read of a table with active deletes — the
         anti-join would ask for a column the mapped scan no longer
-        exposes.  Falls back to the given name for pre-schema-tracking
-        manifests (resolving via the newest schema that knows it, since
-        a later rename chain can legally re-introduce the old name for
-        a DIFFERENT field id)."""
-        schemas = self.schemas()
-        if not schemas:
-            return name
+        exposes.  A manifest without ``schema_id`` resolves via the
+        newest schema that knows the name, since a later rename chain
+        can legally re-introduce the old name for a DIFFERENT field
+        id."""
+        schemas = self._committed_schemas()
         cur = schemas[-1]
         src = None
         if schema_id is not None:
@@ -1418,10 +1313,15 @@ class IceliteTable:
         snapshot — a plan that grows linearly with snapshot count and
         degrades at thousands of snapshots (long incremental jobs).
         Now the manifests provide the file list (like an Iceberg
-        manifest list) and all files go into a single
-        ``spark.read.parquet(*files)`` — flat read, no partition
-        discovery — with the ``bucket`` lineage column rebuilt from the
-        ``bucket=<k>`` path component (a zero-shuffle projection).
+        manifest list) and :meth:`_scan_snaps` puts the files of each
+        schema version into one ``spark.read.parquet(*files)`` — flat
+        read, no partition discovery — projected to the current schema
+        by field id, with the ``bucket`` lineage column rebuilt from
+        the ``bucket=<k>`` path component (a zero-shuffle projection).
+        Every manifest records ``data_files`` and a table with a
+        snapshot has a schema file; a read refuses (ValueError) a table
+        that breaks either rule.
+
         ``prune`` is a list of simple predicates —
         ``("lang", "=", "en")``, ``("n_chars", "between", lo, hi)``,
         ``("n_chars", ">=", x)`` with ops ``= < <= > >= between`` —
@@ -1447,20 +1347,13 @@ class IceliteTable:
                 raise KeyError(
                     f"icelite table {self.path}: no tag {tag!r}"
                 )
-            chain = [
-                s for s in self._all_manifests()
-                if s["sequence"] <= rec["sequence"]
-            ]
-            floor = max(
-                (s["sequence"] for s in chain if s.get("compacted")),
-                default=None,
-            )
-            if floor is not None:
-                chain = [s for s in chain if s["sequence"] >= floor]
             # rollbacks the release was cut AFTER are part of its state
             # (a tag cut BEFORE a rollback has no rollback manifest in
             # its chain and keeps reading the pre-rollback bytes)
-            chain = self._apply_rollbacks(chain)
+            chain = self._live_chain([
+                s for s in self._all_manifests()
+                if s["sequence"] <= rec["sequence"]
+            ])
             out = self._read_snaps(spark, chain, buckets, prune)
             if out is None:
                 raise FileNotFoundError(
@@ -1482,11 +1375,9 @@ class IceliteTable:
             seq = target[0]["sequence"]
             snaps = [s for s in snaps if s["sequence"] <= seq]
         if buckets is not None:
-            keep = {f"bucket={b}" for b in buckets}
             if not any(
-                any(part in keep for part in f.split(os.sep))
-                for s in self._data_manifests(snaps)
-                for f in self._snapshot_files(s)
+                self._file_bucket(rel) in buckets
+                for s in snaps for rel in s["data_files"]
             ):
                 raise FileNotFoundError(
                     f"icelite table {self.path}: no data for buckets {sorted(buckets)}"
@@ -1495,16 +1386,9 @@ class IceliteTable:
             spark, snaps, buckets, prune,
             self._bloom_file_filter(spark, prune),
         )
-        if out is not None:
-            return out
         # no data files at all (fully-deleted table after compaction,
         # or everything pruned): empty frame in the current schema
-        empty = self._empty_frame(spark)
-        if empty is not None:
-            return empty
-        raise FileNotFoundError(
-            f"icelite table {self.path} has no data files"
-        )
+        return out if out is not None else self._empty_frame(spark)
 
     def read_incremental(
         self, spark, after_snapshot: str, until_snapshot: str | None = None
@@ -2214,11 +2098,9 @@ class IceliteTable:
             "partitioning": layout,
             "compacted": True,
             "file_stats": file_stats,
-        }
-        cur_schema = self.current_schema()
-        if cur_schema is not None:
             # data was rewritten through read() → CURRENT names
-            manifest["schema_id"] = cur_schema["schema_id"]
+            "schema_id": self._committed_schemas()[-1]["schema_id"],
+        }
         # require_parent: a compacted manifest supersedes everything
         # below its sequence, so it is only valid for the EXACT
         # history it folded — if any append won a sequence in the
@@ -2352,12 +2234,10 @@ class IceliteTable:
             "metrics": {"rewritten_files": len(set(replaced))},
             "partitioning": parent.get("partitioning"),
             "file_stats": file_stats,
+            "schema_id": self._committed_schemas()[-1]["schema_id"],
         }
         if data_files:
             manifest["data_dir"] = data_dir
-        cur_schema = self.current_schema()
-        if cur_schema is not None:
-            manifest["schema_id"] = cur_schema["schema_id"]
         if self._commit_manifest(manifest, require_parent=True) is None:
             import shutil
 
@@ -2392,7 +2272,6 @@ class IceliteTable:
         ``removed``/``kept_recent`` list directory names relative to
         ``data/``.  ``now`` is injectable for tests."""
         import shutil
-        import time as _time
 
         data_root = os.path.join(self.path, "data")
         report = {"removed": [], "kept_recent": [], "referenced": 0}
@@ -2418,7 +2297,7 @@ class IceliteTable:
                 if len(parts) >= 2 and parts[0] == "data":
                     referenced.add(parts[1])
         report["referenced"] = len(referenced)
-        t_now = _time.time() if now is None else now
+        t_now = time.time() if now is None else now
         for name in sorted(os.listdir(data_root)):
             full = os.path.join(data_root, name)
             if name in referenced or not os.path.isdir(full):
@@ -2593,9 +2472,9 @@ class IceliteTable:
         ]
         if not preds:
             return None
-        schema = self.current_schema()
         col_types = {
-            f["name"]: f["type"] for f in (schema or {}).get("fields", [])
+            f["name"]: f["type"]
+            for f in self._committed_schemas()[-1]["fields"]
         }
         checks = []
         for col, _op, *vals in preds:
@@ -2704,10 +2583,8 @@ class IceliteTable:
             raise FileNotFoundError(
                 f"icelite table {self.path} has no snapshots to delete from"
             )
-        schema = self.current_schema()
-        if schema is not None and key_col not in {
-            f["name"] for f in schema["fields"]
-        }:
+        schema = self._committed_schemas()[-1]
+        if key_col not in {f["name"] for f in schema["fields"]}:
             raise KeyError(
                 f"icelite table {self.path}: delete key {key_col!r} is not "
                 "a column of the current table schema"
@@ -2736,9 +2613,8 @@ class IceliteTable:
             "delete_count": int(n),
             "metrics": {**(metrics or {}), "deleted_keys": int(n)},
             "partitioning": parent.get("partitioning"),
+            "schema_id": schema["schema_id"],
         }
-        if schema is not None:
-            manifest["schema_id"] = schema["schema_id"]
         return self._commit_manifest(manifest)
 
     def merge(
@@ -2957,29 +2833,23 @@ class IceliteBranch(IceliteTable):
         self.schema_dir = self._main.manifest_dir
 
     def _own_manifests(self) -> list[dict]:
-        """The branch's staged commits only (no base history)."""
-        out = []
-        for n in sorted(os.listdir(self.manifest_dir)):
-            if self._name_seq(n, "snap-") is None:
-                continue
-            with open(os.path.join(self.manifest_dir, n)) as f:
-                out.append(json.load(f))
-        out.sort(key=lambda s: s["sequence"])
-        return out
+        """The branch's staged commits only (no base history).  A
+        published or deleted branch has no namespace left to read."""
+        if not os.path.isdir(self.manifest_dir):
+            raise FileNotFoundError(
+                f"icelite table {self.path}: no branch {self.branch_name!r}"
+            )
+        return self._load_manifests(tail_only=False)
 
     def snapshots(self) -> list[dict]:
-        base = [
+        # compactions and rollbacks at-or-below the fork are part of
+        # the pinned base state; the branch itself cannot roll back
+        # (see rollback())
+        base = self._live_chain([
             s for s in self._main._all_manifests()
             if s["sequence"] <= self.fork_sequence
-        ]
-        floor = max(
-            (s["sequence"] for s in base if s.get("compacted")), default=None
-        )
-        if floor is not None:
-            base = [s for s in base if s["sequence"] >= floor]
-        # rollbacks at-or-below the fork are part of the pinned base
-        # state; the branch itself cannot roll back (see rollback())
-        return self._apply_rollbacks(base) + self._own_manifests()
+        ])
+        return base + self._own_manifests()
 
     def compact(self, *a, **k):
         raise NotImplementedError(

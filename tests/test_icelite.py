@@ -3,6 +3,7 @@ north_rule per-partition lineage)."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from mini_html_parser_spark.plans.icelite import IceliteTable
@@ -1094,14 +1095,15 @@ def test_index_keys_params_durable_before_bitmaps(spark, tmp_path):
     assert got == [7, 63]
 
 
-def test_all_manifests_raises_on_persistently_torn_listing(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("scan", ["_all_manifests", "snapshots"])
+def test_all_manifests_raises_on_persistently_torn_listing(
+    spark, tmp_path, monkeypatch, scan
+):
     """Review r6 #4: _all_manifests must not silently return a partial
     history when a listed manifest stays unopenable across the retry
     budget (publish_branch's fast-forward safety check and tag reads
-    consume this view)."""
+    consume this view).  snapshots() reads through the same loader."""
     import os as _os
-
-    import pytest
 
     t = IceliteTable(str(tmp_path / "tbl_torn"))
     t.commit_append(_df(spark, 0, 10))
@@ -1115,4 +1117,34 @@ def test_all_manifests_raises_on_persistently_torn_listing(spark, tmp_path, monk
 
     monkeypatch.setattr(_os, "listdir", phantom)
     with pytest.raises(RuntimeError, match="incomplete after 5 attempts"):
-        t._all_manifests()
+        getattr(t, scan)()
+
+
+def test_manifest_without_data_files_is_refused(spark, tmp_path):
+    """Every writer records ``data_files``; the manifest loader refuses
+    one without it, naming the manifest, instead of walking the data
+    directory."""
+    import json as _json
+
+    t = IceliteTable(str(tmp_path / "no_files"))
+    t.commit_append(_df(spark, 0, 10))
+    mpath = os.path.join(t.manifest_dir, "snap-000000.json")
+    with open(mpath) as f:
+        m = _json.load(f)
+    del m["data_files"]
+    with open(mpath, "w") as f:
+        _json.dump(m, f)
+    for call in (t.snapshots, t._all_manifests, lambda: t.read(spark)):
+        with pytest.raises(ValueError, match="snap-000000.json"):
+            call()
+
+
+def test_read_without_schema_file_is_refused(spark, tmp_path):
+    """A table with a snapshot always has a schema file (commit_append
+    registers v0 before the first manifest); a read of one whose
+    schema file is gone raises instead of scanning the raw parquet."""
+    t = IceliteTable(str(tmp_path / "no_schema"))
+    t.commit_append(_df(spark, 0, 10))
+    os.remove(os.path.join(t.manifest_dir, "schema-000000.json"))
+    with pytest.raises(ValueError, match="no _icelite/schema"):
+        t.read(spark)

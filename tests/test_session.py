@@ -92,4 +92,13 @@ def test_extract_job_under_spark_submit(spark, spark_submit, tmp_path):
     ))
     assert report["mode"] == "batch"
     assert report["committed_rows"] == 12
+    assert report["session"] == {
+        "master": "local[2]",
+        "default_parallelism": 2,
+        "arrow_max_records": ARROW_MAX_RECORDS,
+        "shuffle_partitions": DEFAULT_SHUFFLE_PARTITIONS,
+        # the driver imports pyspark from pyspark.zip under spark-submit,
+        # so the job runs Spark's own worker daemon
+        "daemon": None,
+    }
     assert IceliteTable(out).read(spark).count() == 12
