@@ -214,25 +214,23 @@ def _encode_cached(pretoken: str, merges: tuple) -> tuple[str, ...]:
     return tuple(s.split(" ")[:-1])
 
 
-@lru_cache(maxsize=262144)
-def _encode_classic_cached(pretoken: str, merges: tuple) -> tuple[str, ...]:
-    """TRUE BPE application (Sennrich/GPT-2 semantics): repeatedly
-    merge the lowest-rank pair PRESENT in the symbol sequence (all its
-    occurrences, leftmost-first) until no merge applies.  Differs from
-    the single-pass form on (a) immediately-repeated pairs whose merge
-    re-creates an earlier-rank pair and (b) symbol sequences where the
-    flat string-replace would match across a symbol boundary (one
-    symbol a suffix of another).  Not expressible as chained
-    ``replace`` calls, hence Python-only — the single-pass form stays
-    the oracle-replicable default."""
-    ranks = {p: i for i, p in enumerate(merges)}
-    syms = list(pretoken)
+def classic_merge(symbols, ranks: dict) -> tuple[str, ...]:
+    """TRUE BPE application (Sennrich/GPT-2 semantics) — THE classic
+    merge loop, shared with ``gpt2_bpe.Gpt2Encoder``: repeatedly
+    merge the lowest-rank pair PRESENT in ``symbols`` (all its
+    occurrences, leftmost-first) until no pair of ``ranks`` (pair →
+    rank) applies.  Differs from the single-pass form on (a)
+    immediately-repeated pairs whose merge re-creates an earlier-rank
+    pair and (b) symbol sequences where the flat string-replace would
+    match across a symbol boundary (one symbol a suffix of another).
+    Not expressible as chained ``replace`` calls, hence Python-only —
+    the single-pass form stays the oracle-replicable default."""
+    syms = list(symbols)
     while len(syms) > 1:
-        best = None
-        best_rank = len(merges)
+        best, best_rank = None, None
         for p in zip(syms, syms[1:]):
-            rk = ranks.get(p, -1)
-            if rk >= 0 and rk < best_rank:
+            rk = ranks.get(p)
+            if rk is not None and (best_rank is None or rk < best_rank):
                 best, best_rank = p, rk
         if best is None:
             break
@@ -248,6 +246,13 @@ def _encode_classic_cached(pretoken: str, merges: tuple) -> tuple[str, ...]:
                 i += 1
         syms = out
     return tuple(syms)
+
+
+@lru_cache(maxsize=262144)
+def _encode_classic_cached(pretoken: str, merges: tuple) -> tuple[str, ...]:
+    """:func:`classic_merge` of ``pretoken``'s characters under
+    ``merges`` (in rank order)."""
+    return classic_merge(pretoken, {p: i for i, p in enumerate(merges)})
 
 
 def encode_pretoken(pretoken: str, merges=None, fixpoint: bool = False) -> tuple[str, ...]:

@@ -17,8 +17,8 @@ published description — no code copied):
    — implemented as an explicit scanner (stdlib ``re`` lacks ``\\p``
    classes; ``unicodedata`` categories give the exact semantics);
 3. **merge application**: lowest-rank-present-pair iteration (the
-   classic/GPT-2 loop — the same algorithm as
-   ``bpe._encode_classic_cached``, over byte-level symbols).
+   classic/GPT-2 loop — ``bpe.classic_merge``, the function the
+   character-level classic encoder runs, over byte-level symbols).
 
 **Parity contract**: point ``load_gpt2_merges`` at the public GPT-2
 ``merges.txt`` (50 000 ranks) and :func:`gpt2_encode` /
@@ -47,6 +47,8 @@ from functools import lru_cache
 import pandas as pd  # module-level: pandas_udf stringified type hints
 
 from pyspark.sql import DataFrame, functions as F
+
+from .bpe import classic_merge
 
 
 def bytes_to_unicode() -> dict[int, str]:
@@ -201,34 +203,12 @@ class Gpt2Encoder:
     def __init__(self, merges) -> None:
         self.merges = tuple(merges)
         self._ranks = {p: i for i, p in enumerate(self.merges)}
-        self._n = len(self.merges)
         self._merge = lru_cache(maxsize=262144)(self._merge_uncached)
 
     def _merge_uncached(self, symbols: tuple[str, ...]) -> tuple[str, ...]:
-        """The GPT-2 merge loop: repeatedly merge every occurrence of
-        the lowest-rank pair present until none applies."""
-        ranks = self._ranks
-        syms = list(symbols)
-        while len(syms) > 1:
-            best, best_rank = None, self._n
-            for p in zip(syms, syms[1:]):
-                rk = ranks.get(p, -1)
-                if 0 <= rk < best_rank:
-                    best, best_rank = p, rk
-            if best is None:
-                break
-            x, y = best
-            out: list[str] = []
-            i = 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == x and syms[i + 1] == y:
-                    out.append(x + y)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        return tuple(syms)
+        """The GPT-2 merge loop: :func:`.bpe.classic_merge` under this
+        table's ranks."""
+        return classic_merge(symbols, self._ranks)
 
     def encode_pretoken(self, pretoken: str) -> tuple[str, ...]:
         mapped = tuple(BYTE_ENCODER[b] for b in pretoken.encode("utf-8"))

@@ -18,10 +18,11 @@ two genuinely-functional layers rather than a stub:
   byte-exact round-trip contract the DuckDB oracle can check in
   closed form.
 
-Spark side: :func:`parse_pdf_documents` is an Arrow-batched
-``mapInPandas`` stage, like the HTML kernel's ``mapInArrow`` one —
-binary column in, (text, n_pages, malformed) out, no per-row Python
-at the DataFrame level.
+Spark side: :func:`parse_pdf_interleaved` is the one Arrow-batched
+``mapInPandas`` parse stage, like the HTML kernel's ``mapInArrow``
+one — binary column in, (spans, n_pages, malformed) out, no per-row
+Python at the DataFrame level; :func:`parse_pdf_documents` is a
+Catalyst projection of its spans to text.
 Malformed bytes degrade to ``malformed=True`` with empty text, the
 same fallback-metric contract as the HTML path.
 """
@@ -33,13 +34,6 @@ import zlib
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 # ---------------------------------------------------------------------------
 # minimal writer (datagen/tests)
@@ -468,43 +462,6 @@ def extract_pdf_text(data: bytes) -> tuple[str, int, bool]:
 # Spark operator
 # ---------------------------------------------------------------------------
 
-PDF_RESULT_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("text", StringType()),
-        StructField("n_pages", IntegerType()),
-        StructField("malformed", BooleanType()),
-    ]
-)
-
-
-def parse_pdf_documents(
-    df: DataFrame, content_col: str = "content", id_col: str = "doc_id"
-) -> DataFrame:
-    """Arrow-batched PDF text extraction: ``(id, binary)`` in →
-    ``(doc_id, text, n_pages, malformed)`` out.  Stateless narrow map
-    — identical scaling shape to the HTML extraction kernel (and the
-    same malformed-fallback metric contract)."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            ids, texts, pages, bad = [], [], [], []
-            for doc_id, blob in zip(pdf[id_col], pdf[content_col]):
-                t, n, m = extract_pdf_text(bytes(blob) if blob is not None else b"")
-                ids.append(str(doc_id))
-                texts.append(t)
-                pages.append(n)
-                bad.append(m)
-            yield pd.DataFrame(
-                {"doc_id": ids, "text": texts, "n_pages": pages, "malformed": bad}
-            )
-
-    return df.select(F.col(id_col), F.col(content_col)).mapInPandas(
-        run, PDF_RESULT_SCHEMA
-    )
-
-
 # the input_hint span schema: (kind, text, media_ref, offset)
 PDF_SPANS_SCHEMA = (
     "doc_id string, "
@@ -567,4 +524,21 @@ def parse_pdf_interleaved(
         schema = f"{PDF_SPANS_SCHEMA}, {extra_schema}"
     return df.select(F.col(id_col), F.col(content_col), *extra).mapInPandas(
         run, schema
+    )
+
+
+def parse_pdf_documents(
+    df: DataFrame, content_col: str = "content", id_col: str = "doc_id"
+) -> DataFrame:
+    """PDF text extraction: ``(id, binary)`` in → ``(doc_id, text,
+    n_pages, malformed)`` out.  One Catalyst projection over
+    :func:`parse_pdf_interleaved` — ``text`` joins the span texts in
+    document order, and media spans carry ``""``, so it equals
+    :func:`extract_pdf_text` (the scalar reference) — with no parse
+    stage of its own."""
+    return parse_pdf_interleaved(df, content_col, id_col).select(
+        "doc_id",
+        F.array_join(F.transform("spans", lambda s: s["text"]), "").alias("text"),
+        "n_pages",
+        "malformed",
     )

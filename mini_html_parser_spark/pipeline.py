@@ -354,7 +354,6 @@ def _run_job(
     observed, obs = observed_extraction(extract_stage(pending))
     snapshot = table.commit_append(
         observed,
-        partition_col="bucket",
         metrics_provider=lambda: {k: int(v) for k, v in obs.get.items()},
         partitioning=layout,
         auto_compact_every=auto_compact_every,

@@ -21,6 +21,10 @@ Layout::
 A manifest records: snapshot id, parent id, data dir + file list
 (``data_files``, ``[]`` for commits without data), committed buckets,
 per-bucket row counts (lineage), schema id, and job-level metrics.
+Every commit kind writes through one snapshot writer: _new_manifest
+(shared manifest fields), _write_data (the one bucket write —
+``bucket`` is the only partition column), _write_delete_keys and
+_link_json (the one create-exclusive JSON publish).
 Readers scan the manifests' file lists and refuse a manifest without
 one (there is one manifest format, no directory walk); a
 crashed or lost-race write never commits (its dir stays
@@ -50,6 +54,8 @@ from __future__ import annotations
 
 import json
 import os
+from contextlib import suppress
+import shutil
 import time
 import uuid
 
@@ -118,6 +124,25 @@ def _parquet_dir_readable(path: str) -> bool:
         name.startswith("part-") and not name.endswith(".crc")
         for name in os.listdir(path)
     )
+
+
+def _link_json(path: str, obj) -> bool:
+    """Create-exclusive JSON publish: ``obj`` is written FULLY to a
+    writer-unique tmp file beside ``path``, then ``os.link``ed to it.
+    The link is atomic and fails if ``path`` exists, so exactly one
+    writer wins each name and readers never see a partial file.
+    Returns True iff this call created ``path``."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.{uuid.uuid4().hex}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=2)
+    try:
+        os.link(tmp, path)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.remove(tmp)
 
 
 def _file_may_match(stats: dict | None, prune, rename: dict) -> bool:
@@ -283,9 +308,9 @@ class IceliteTable:
         commit protocol is untouched — a checkpoint is a derived
         view, the manifests stay truth).
 
-        Concurrency: the checkpoint is written to a writer-unique tmp
-        file and ``os.link``ed into place (same arbitration as
-        commits); a same-sequence race is benign — both checkpoints
+        Concurrency: the checkpoint is published through
+        :func:`_link_json` (same arbitration as commits); a
+        same-sequence race is benign — both checkpoints
         fold the identical active list.  Only STRICTLY-OLDER
         checkpoints are removed afterwards, so racing a newer
         checkpoint never regresses the metadata tip.
@@ -314,26 +339,19 @@ class IceliteTable:
         if not snaps:
             return None
         seq = snaps[-1]["sequence"]
-        tmp = os.path.join(
-            self.manifest_dir, f".ckpt-{seq}-{uuid.uuid4().hex}.json.tmp"
+        # a lost same-sequence race is benign: the durable checkpoint
+        # folds the identical active list
+        _link_json(
+            os.path.join(self.manifest_dir, f"ckpt-{seq:06d}.json"),
+            {"sequence": seq, "snapshots": snaps},
         )
-        with open(tmp, "w") as f:
-            json.dump({"sequence": seq, "snapshots": snaps}, f, indent=2)
-        target = os.path.join(self.manifest_dir, f"ckpt-{seq:06d}.json")
-        try:
-            os.link(tmp, target)
-        except FileExistsError:
-            pass  # same-sequence checkpoint already durable: equivalent
-        os.remove(tmp)
         # the new checkpoint is durable; older checkpoints and
         # (optionally) the folded manifests are cleanup, not truth
         for name in os.listdir(self.manifest_dir):
             s = self._name_seq(name, "ckpt-")
             if s is not None and s < seq:
-                try:
+                with suppress(FileNotFoundError):
                     os.remove(os.path.join(self.manifest_dir, name))
-                except FileNotFoundError:
-                    pass
         if expire_manifests:
             # tag-pinned manifests must survive as FILES: a later
             # post-compact checkpoint folds only the active view, so
@@ -346,10 +364,8 @@ class IceliteTable:
                 p = os.path.join(
                     self.manifest_dir, f"snap-{s['sequence']:06d}.json"
                 )
-                try:
+                with suppress(FileNotFoundError):
                     os.remove(p)
-                except FileNotFoundError:
-                    pass
         return {"sequence": seq, "count": len(snaps)}
 
     def current_snapshot(self) -> dict | None:
@@ -393,41 +409,26 @@ class IceliteTable:
         return ss[-1] if ss else None
 
     def _write_schema(self, schema: dict) -> dict:
-        """Publish a schema version with the same link arbitration as
-        manifests (_commit_manifest): writer-unique tmp + atomic
-        os.link, so exactly one writer wins ``schema-<k>`` and readers
-        never see a partial file.  A LOSER gets the winner's content
-        back — callers must compare/validate against the return value
-        rather than assume their own schema was registered."""
+        """Publish a schema version through :func:`_link_json`, so
+        exactly one writer wins ``schema-<k>``.  A LOSER gets the
+        winner's content back — callers must compare/validate against
+        the return value rather than assume their own schema was
+        registered."""
         os.makedirs(self.schema_dir, exist_ok=True)
-        k = schema["schema_id"]
-        target = os.path.join(self.schema_dir, f"schema-{k:06d}.json")
-        tmp = os.path.join(
-            self.schema_dir, f".schema-{k}-{uuid.uuid4().hex}.json.tmp"
+        target = os.path.join(
+            self.schema_dir, f"schema-{schema['schema_id']:06d}.json"
         )
-        with open(tmp, "w") as f:
-            json.dump(schema, f, indent=2)
-        try:
-            os.link(tmp, target)
-        except FileExistsError:
-            os.remove(tmp)
-            with open(target) as f:
-                return json.load(f)
-        os.remove(tmp)
-        return schema
+        if _link_json(target, schema):
+            return schema
+        with open(target) as f:
+            return json.load(f)
 
-    def _validate_append_schema(
-        self, df: DataFrame, schema: dict, partition_col: str
-    ) -> None:
+    def _validate_append_schema(self, df: DataFrame, schema: dict) -> None:
         """Refuse name OR type drift between ``df`` and the recorded
         table schema (silent drift across appends is how a long-lived
         table rots; a type change has no evolution path)."""
         want = {f["name"]: f["type"] for f in schema["fields"]}
-        got = {
-            f.name: f.dataType.simpleString()
-            for f in df.schema.fields
-            if f.name != partition_col
-        }
+        got = {f["name"]: f["type"] for f in self._schema_from_df(df)["fields"]}
         if set(got) != set(want):
             raise ValueError(
                 f"icelite table {self.path}: append columns "
@@ -446,11 +447,14 @@ class IceliteTable:
                 + "; cast the columns before appending"
             )
 
-    def _schema_from_df(self, df: DataFrame, partition_col: str) -> dict:
+    @staticmethod
+    def _schema_from_df(df: DataFrame) -> dict:
+        """Schema v0 of ``df``: every column but the ``bucket``
+        partition column, which lives in the data files' paths."""
         fields = [
             {"id": i + 1, "name": f.name, "type": f.dataType.simpleString()}
             for i, f in enumerate(df.schema.fields)
-            if f.name != partition_col
+            if f.name != "bucket"
         ]
         return {
             "schema_id": 0,
@@ -575,10 +579,10 @@ class IceliteTable:
         )
 
     @staticmethod
-    def _file_bucket(rel: str, col: str = "bucket") -> int | None:
+    def _file_bucket(rel: str) -> int | None:
         for part in rel.split(os.sep):
-            if part.startswith(f"{col}="):
-                return int(part[len(col) + 1:])
+            if part.startswith("bucket="):
+                return int(part[len("bucket="):])
         return None
 
     def files_summary(self) -> list[dict]:
@@ -741,21 +745,13 @@ class IceliteTable:
             "sequence": target["sequence"],
             "created_at": time.time(),
         }
-        tmp = os.path.join(
-            self.manifest_dir, f".tag-{name}-{uuid.uuid4().hex}.json.tmp"
-        )
-        with open(tmp, "w") as f:
-            json.dump(rec, f, indent=2)
-        target_path = os.path.join(self.manifest_dir, f"tag-{name}.json")
-        try:
-            os.link(tmp, target_path)
-        except FileExistsError:
-            os.remove(tmp)
+        if not _link_json(
+            os.path.join(self.manifest_dir, f"tag-{name}.json"), rec
+        ):
             raise FileExistsError(
                 f"icelite table {self.path}: tag {name!r} already exists "
                 "(releases are immutable; delete_tag first to re-cut)"
             )
-        os.remove(tmp)
         return rec
 
     def delete_tag(self, name: str) -> bool:
@@ -814,20 +810,13 @@ class IceliteTable:
                 f"icelite table {self.path}: {to_snapshot_id!r} is already "
                 "the current snapshot — nothing to roll back"
             )
-        manifest = {
-            "sequence": tip["sequence"] + 1,
-            "snapshot_id": uuid.uuid4().hex,
-            "parent_id": tip["snapshot_id"],
-            "data_files": [],
-            "bucket_rows": {},
-            "total_rows": 0,
-            "rollback_to": target["sequence"],
-            "rollback_to_id": target["snapshot_id"],
-            "metrics": {**(metrics or {}), "rolled_back_from": tip["sequence"]},
-            "partitioning": target.get("partitioning"),
-            "schema_id": self._committed_schemas()[-1]["schema_id"],
-        }
-        return self._commit_manifest(manifest)
+        return self._commit_manifest(self._new_manifest(
+            tip,
+            rollback_to=target["sequence"],
+            rollback_to_id=target["snapshot_id"],
+            metrics={**(metrics or {}), "rolled_back_from": tip["sequence"]},
+            partitioning=target.get("partitioning"),
+        ))
 
     def _all_manifests(self) -> list[dict]:
         """Every manifest on disk or folded into the newest checkpoint,
@@ -884,14 +873,11 @@ class IceliteTable:
                 "fork_sequence": rec["sequence"],
                 "fork_snapshot_id": rec["snapshot_id"],
             }
-            with open(os.path.join(bdir, "branch.json"), "w") as f:
-                json.dump(meta, f, indent=2)
+            _link_json(os.path.join(bdir, "branch.json"), meta)
         except BaseException:
             # best-effort rollback of the mutex dir on a FAILED (not
             # crashed) create; a crash instead leaves the dir, which
             # delete_branch cleans
-            import shutil
-
             self.delete_tag(f"__branch-{name}")
             shutil.rmtree(bdir, ignore_errors=True)
             raise
@@ -987,8 +973,6 @@ class IceliteTable:
         orphaned ``__branch-*`` tag that would pin maintenance forever
         and block re-creating the name (mirrors create_branch's
         dir-first ordering)."""
-        import shutil
-
         bdir = os.path.join(self.manifest_dir, f"branch-{name}")
         existed = os.path.isdir(bdir)
         self.delete_tag(f"__branch-{name}")
@@ -1667,7 +1651,6 @@ class IceliteTable:
     def filter_pending(
         self,
         df: DataFrame,
-        bucket_col: str = "bucket",
         key_col: str = "doc_id",
         exact: bool | None = None,
     ) -> DataFrame:
@@ -1708,32 +1691,39 @@ class IceliteTable:
         done = self.committed_buckets()
         if not done:
             return df
-        return df.filter(~F.col(bucket_col).isin(sorted(done)))
+        return df.filter(~F.col("bucket").isin(sorted(done)))
 
     def _list_data_files(self, data_dir: str) -> list[str]:
         """Relative parquet paths under a freshly-written data dir —
         recorded in the manifest so reads never list storage."""
-        files = []
-        for root, _dirs, names in os.walk(data_dir):
-            for n in names:
-                if n.endswith(".parquet"):
-                    files.append(
-                        os.path.relpath(os.path.join(root, n), self.path)
-                    )
-        return sorted(files)
+        return sorted(
+            os.path.relpath(os.path.join(root, n), self.path)
+            for root, _dirs, names in os.walk(data_dir)
+            for n in names
+            if n.endswith(".parquet")
+        )
 
-    def _footer_lineage(
-        self, data_dir: str, partition_col: str = "bucket"
-    ) -> tuple[list[str], dict, dict]:
-        """``(data_files, bucket_rows, file_stats)`` of a freshly
-        written data dir, from the parquet footers alone (no Spark
-        job, the data is never re-scanned): rows per lineage bucket
-        sum each file's ``num_rows`` under its ``<partition_col>=``
-        directory.  Each footer is opened once for both lineage and
-        stats.  A footer that cannot be read fails the commit (the
-        lineage would be wrong); the stats stay best-effort."""
+    def _new_data_dir(self, snap_n: int) -> str:
+        """uuid-suffixed: concurrent writers never share a directory
+        (the sequence race is settled at the manifest link; reads use
+        the manifest's file list, never the dir name)."""
+        return os.path.join(
+            self.path, "data", f"snap-{snap_n}-{uuid.uuid4().hex[:8]}"
+        )
+
+    def _write_data(self, out: DataFrame, snap_n: int) -> dict:
+        """THE data write of every commit: ``out`` partitioned by
+        ``bucket`` into a fresh data dir, and the manifest fields it
+        produced (``data_dir``, ``data_files``, ``bucket_rows``,
+        ``total_rows``, ``file_stats``) from the parquet footers alone
+        — no Spark job re-scans the data.  An unreadable footer fails
+        the commit (the lineage would be wrong); a stats failure only
+        records no bounds.  A write that got no rows leaves no dir and
+        records no ``data_dir``."""
         import pyarrow.parquet as pq
 
+        data_dir = self._new_data_dir(snap_n)
+        out.write.partitionBy("bucket").mode("overwrite").parquet(data_dir)
         data_files = self._list_data_files(data_dir)
         footers = {
             rel: pq.read_metadata(os.path.join(self.path, rel))
@@ -1741,9 +1731,64 @@ class IceliteTable:
         }
         bucket_rows: dict[str, int] = {}
         for rel, md in footers.items():
-            b = str(self._file_bucket(rel, partition_col))
+            b = str(self._file_bucket(rel))
             bucket_rows[b] = bucket_rows.get(b, 0) + md.num_rows
-        return data_files, bucket_rows, self._try_file_stats(footers)
+        try:
+            file_stats = self._collect_file_stats(footers)
+        except Exception:  # an optimization: never fails a commit
+            file_stats = {}
+        fields = {
+            "data_files": data_files,
+            "bucket_rows": bucket_rows,
+            "total_rows": int(sum(bucket_rows.values())),
+            "file_stats": file_stats,
+        }
+        if data_files:
+            fields["data_dir"] = data_dir
+        else:
+            shutil.rmtree(data_dir, ignore_errors=True)
+        return fields
+
+    def _write_delete_keys(
+        self, keys: DataFrame, key_col: str, snap_n: int
+    ) -> dict | None:
+        """THE equality-delete write (commit_delete and merge): the
+        distinct ``key_col`` values of ``keys`` into a fresh
+        ``-deletes`` dir, and the manifest fields recording them —
+        or None, with the dir removed, when there are no keys."""
+        delete_dir = self._new_data_dir(snap_n) + "-deletes"
+        keys.select(key_col).distinct().write.mode("overwrite").parquet(
+            delete_dir
+        )
+        n = keys.sparkSession.read.parquet(delete_dir).count()
+        if n == 0:
+            shutil.rmtree(delete_dir, ignore_errors=True)
+            return None
+        return {
+            "delete_key": key_col,
+            "delete_files": self._list_data_files(delete_dir),
+            "delete_count": int(n),
+        }
+
+    def _new_manifest(self, parent: dict | None, **fields) -> dict:
+        """A manifest for the commit after ``parent`` (None: the
+        table's first): next sequence, fresh snapshot id, parent link,
+        no data or delete files, the parent's layout, and the current
+        schema id — then the commit's own ``fields``, which override
+        any of these."""
+        manifest = {
+            "sequence": parent["sequence"] + 1 if parent else 0,
+            "snapshot_id": uuid.uuid4().hex,
+            "parent_id": parent["snapshot_id"] if parent else None,
+            "data_files": [],
+            "bucket_rows": {},
+            "total_rows": 0,
+            "partitioning": (parent or {}).get("partitioning"),
+            **fields,
+        }
+        if "schema_id" not in manifest:
+            manifest["schema_id"] = self._committed_schemas()[-1]["schema_id"]
+        return manifest
 
     def _collect_file_stats(self, footers: dict) -> dict:
         """Per-file ``{column: [min, max]}`` bounds for scalar columns,
@@ -1812,36 +1857,27 @@ class IceliteTable:
                 out[rel] = stats
         return out
 
-    def _try_file_stats(self, footers: dict) -> dict:
-        """file_stats are an optimization — a stats failure must never
-        fail a commit (the manifest simply records no bounds and every
-        read keeps the file)."""
-        try:
-            return self._collect_file_stats(footers)
-        except Exception:
-            return {}
-
     # ---- commit protocol (optimistic concurrency) ----------------------------
     def _commit_manifest(
         self, manifest: dict, require_parent: bool = False
     ) -> dict | None:
         """Publish a manifest with Iceberg-style optimistic
-        concurrency.  The manifest is written FULLY to a
-        writer-unique tmp file, then ``os.link``ed to its
-        sequence-numbered name — link is atomic and fails with
-        FileExistsError if another writer already took the sequence,
-        so exactly one writer wins each sequence and readers can never
-        observe a partial manifest.  A loser re-reads the tip,
-        re-parents, and retries at the next sequence (data dirs are
-        uuid-suffixed, so concurrent writers never clobber each
-        other's files either).
+        concurrency.  The manifest is linked to its sequence-numbered
+        name by :func:`_link_json`, so exactly one writer wins each
+        sequence and readers can never observe a partial manifest.  A
+        loser re-reads the tip, re-parents, and retries at the next
+        sequence (data dirs are uuid-suffixed, so concurrent writers
+        never clobber each other's files either).
 
-        ``require_parent=True`` (compaction): the manifest is only
-        valid for the exact history it folded — if ANY snapshot
+        ``require_parent=True`` (compaction, rewrite): the manifest is
+        only valid for the exact history it folded — if ANY snapshot
         committed after it was computed, publishing would supersede
         data it never read, so the commit aborts (returns None)
-        instead of retrying.  On object stores without link semantics
-        the swap belongs to a real catalog; this protocol is the
+        instead of retrying, and drops the manifest's ``data_dir``,
+        which nothing can reference now (under contention with
+        auto_compact each aborted attempt would otherwise leak a
+        full-table-sized directory).  On object stores without link
+        semantics the swap belongs to a real catalog; this protocol is the
         single-filesystem seam for it (same as Iceberg's
         HadoopTableOperations vs catalog-based commits)."""
         os.makedirs(self.manifest_dir, exist_ok=True)
@@ -1851,27 +1887,18 @@ class IceliteTable:
             tip = self.current_snapshot()
             tip_id = tip["snapshot_id"] if tip else None
             if require_parent and tip_id != expected_parent:
+                if manifest.get("data_dir"):
+                    shutil.rmtree(manifest["data_dir"], ignore_errors=True)
                 return None  # history advanced under a compaction
             if not require_parent:
                 manifest["parent_id"] = tip_id
                 if tip is not None:
                     seq = max(seq, tip["sequence"] + 1)
             manifest["sequence"] = seq
-            tmp = os.path.join(
-                self.manifest_dir,
-                f".snap-{seq}-{manifest['snapshot_id']}.json.tmp",
-            )
-            with open(tmp, "w") as f:
-                json.dump(manifest, f, indent=2)
             target = os.path.join(self.manifest_dir, f"snap-{seq:06d}.json")
-            try:
-                os.link(tmp, target)
-            except FileExistsError:
-                os.remove(tmp)
-                seq += 1
-                continue
-            os.remove(tmp)
-            return manifest
+            if _link_json(target, manifest):
+                return manifest
+            seq += 1
 
     # ---- maintenance ---------------------------------------------------------
     @staticmethod
@@ -1931,7 +1958,6 @@ class IceliteTable:
         self,
         spark,
         full: DataFrame,
-        bucket_col: str,
         sort_within_buckets: list[str] | None,
         zorder: list[str] | None,
     ) -> DataFrame:
@@ -1965,17 +1991,17 @@ class IceliteTable:
             n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
             return (
                 full.withColumn("__zv", zv)
-                .repartitionByRange(n_parts, F.col(bucket_col), F.col("__zv"))
-                .sortWithinPartitions(bucket_col, "__zv")
+                .repartitionByRange(n_parts, F.col("bucket"), F.col("__zv"))
+                .sortWithinPartitions("bucket", "__zv")
                 .drop("__zv")
             )
         if sort_within_buckets:
-            cols = [F.col(bucket_col)] + [F.col(c) for c in sort_within_buckets]
+            cols = [F.col("bucket")] + [F.col(c) for c in sort_within_buckets]
             n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
             return full.repartitionByRange(
                 n_parts, *cols
             ).sortWithinPartitions(*cols)
-        return full.repartition(bucket_col)
+        return full.repartition("bucket")
 
     def compact(
         self,
@@ -1996,6 +2022,10 @@ class IceliteTable:
         between the manifest write and the removes) leaves a readable,
         duplicate-free table; committed_buckets/partitioning are
         preserved.  Old data dirs are left in place, never referenced.
+        The rows go through :meth:`_write_data` like every commit's; a
+        table with no live rows compacts to a manifest with no files
+        and no ``data_dir`` (no empty dir is left behind), and an
+        aborted commit drops the dir it wrote (:meth:`_commit_manifest`).
 
         ``rebucket_to`` is partition-spec EVOLUTION (Iceberg's
         ``replace_partition_field``, applied as a full rewrite): every
@@ -2035,7 +2065,6 @@ class IceliteTable:
             return None  # nothing to fold and no re-layout requested
         full = self.read(spark)
         layout = self.partitioning()
-        bucket_col = "bucket"
         if rebucket_to is not None:
             if key_col not in full.columns:
                 raise ValueError(
@@ -2052,20 +2081,12 @@ class IceliteTable:
             }
         parent = snaps[-1]
         snap_n = parent["sequence"] + 1
-        data_dir = os.path.join(
-            self.path, "data", f"snap-{snap_n}-{uuid.uuid4().hex[:8]}"
-        )
-        out = self._clustered_for_write(
-            spark, full, bucket_col, sort_within_buckets, zorder
-        )
-        out.write.partitionBy(bucket_col).mode("overwrite").parquet(data_dir)
-
-        # a fully-deleted table compacts to ZERO data files (the write
-        # above emits only _SUCCESS): still publish the compacted
-        # manifest — it supersedes the history, expiring both the old
-        # data and the now-folded delete files
-        data_files, bucket_rows, file_stats = self._footer_lineage(
-            data_dir, bucket_col
+        # a fully-deleted table compacts to ZERO data files: still
+        # publish the compacted manifest — it supersedes the history,
+        # expiring both the old data and the now-folded delete files
+        data = self._write_data(
+            self._clustered_for_write(spark, full, sort_within_buckets, zorder),
+            snap_n,
         )
         # job-level metrics are additive counters (docs parsed, spans
         # emitted, malformed fallbacks): key-wise sum the folded
@@ -2086,33 +2107,20 @@ class IceliteTable:
                     merged_metrics[k] = merged_metrics.get(k, 0) + v
         if stream_ids:
             merged_metrics["stream_batch_ids"] = sorted(stream_ids)
-        manifest = {
-            "sequence": snap_n,
-            "snapshot_id": uuid.uuid4().hex,
-            "parent_id": parent["snapshot_id"],
-            "data_dir": data_dir,
-            "data_files": data_files,
-            "bucket_rows": bucket_rows,
-            "total_rows": int(sum(bucket_rows.values())),
-            "metrics": {**merged_metrics, "compacted_snapshots": len(snaps)},
-            "partitioning": layout,
-            "compacted": True,
-            "file_stats": file_stats,
-            # data was rewritten through read() → CURRENT names
-            "schema_id": self._committed_schemas()[-1]["schema_id"],
-        }
+        # rows rewritten through read() carry the CURRENT schema
+        manifest = self._new_manifest(
+            parent,
+            **data,
+            metrics={**merged_metrics, "compacted_snapshots": len(snaps)},
+            partitioning=layout,
+            compacted=True,
+        )
         # require_parent: a compacted manifest supersedes everything
         # below its sequence, so it is only valid for the EXACT
         # history it folded — if any append won a sequence in the
         # meantime, publishing would shadow data this rewrite never
-        # read.  Abort instead; the rewrite dir is provably
-        # unreferenced at this point, so drop it (under contention +
-        # auto_compact each aborted attempt would otherwise leak a
-        # full-table-sized directory).
+        # read.  Abort instead (the commit drops the rewrite dir).
         if self._commit_manifest(manifest, require_parent=True) is None:
-            import shutil
-
-            shutil.rmtree(data_dir, ignore_errors=True)
             return None
         # the new manifest is durable; superseded manifests can go —
         # except tag-PINNED ones (a tagged release needs its full
@@ -2132,10 +2140,8 @@ class IceliteTable:
             s_old = self._name_seq(name, "snap-")
             if s_old is None or s_old >= snap_n or s_old in pinned:
                 continue
-            try:
+            with suppress(FileNotFoundError):
                 os.remove(os.path.join(self.manifest_dir, name))
-            except FileNotFoundError:
-                pass
         return manifest
 
     def rewrite(
@@ -2182,6 +2188,9 @@ class IceliteTable:
         for the rewritten rows, so any history advance aborts (returns
         None), same contract as compact().
 
+        The rows go through :meth:`_write_data`; buckets with no live
+        rows left commit a manifest with no files and no ``data_dir``.
+
         Returns the committed manifest, or None when the buckets have
         no live files or the commit lost the race."""
         if zorder and sort_within_buckets:
@@ -2197,53 +2206,30 @@ class IceliteTable:
         if not buckets:
             raise ValueError("rewrite needs at least one bucket")
         drop = self._replaced_map(snaps)
-        replaced: list[str] = []
-        for s in self._data_manifests(snaps):
-            for f in self._live_files(s, drop):
-                rel = os.path.relpath(f, self.path)
-                if self._file_bucket(rel) in buckets:
-                    replaced.append(rel)
+        replaced = sorted({
+            os.path.relpath(f, self.path)
+            for s in self._data_manifests(snaps)
+            for f in self._live_files(s, drop)
+            if self._file_bucket(os.path.relpath(f, self.path)) in buckets
+        })
         if not replaced:
             return None  # nothing live in those buckets
         full = self.read(spark, buckets=buckets)  # deletes folded
         parent = snaps[-1]
-        snap_n = parent["sequence"] + 1
-        data_dir = os.path.join(
-            self.path, "data", f"snap-{snap_n}-{uuid.uuid4().hex[:8]}"
+        # every row of the chosen buckets deleted: a zero-file rewrite
+        # still folds the dead files out of the read
+        data = self._write_data(
+            self._clustered_for_write(spark, full, sort_within_buckets, zorder),
+            parent["sequence"] + 1,
         )
-        out = self._clustered_for_write(
-            spark, full, "bucket", sort_within_buckets, zorder
+        manifest = self._new_manifest(
+            parent,
+            **data,
+            replaces=replaced,
+            rewrites_buckets=sorted(buckets),
+            metrics={"rewritten_files": len(replaced)},
         )
-        out.write.partitionBy("bucket").mode("overwrite").parquet(data_dir)
-        data_files, bucket_rows, file_stats = self._footer_lineage(data_dir)
-        if not data_files:
-            # every row of the chosen buckets was deleted: a zero-file
-            # rewrite still folds the dead files out of the read
-            import shutil
-
-            shutil.rmtree(data_dir, ignore_errors=True)
-        manifest = {
-            "sequence": snap_n,
-            "snapshot_id": uuid.uuid4().hex,
-            "parent_id": parent["snapshot_id"],
-            "data_files": data_files,
-            "bucket_rows": bucket_rows,
-            "total_rows": int(sum(bucket_rows.values())),
-            "replaces": sorted(set(replaced)),
-            "rewrites_buckets": sorted(buckets),
-            "metrics": {"rewritten_files": len(set(replaced))},
-            "partitioning": parent.get("partitioning"),
-            "file_stats": file_stats,
-            "schema_id": self._committed_schemas()[-1]["schema_id"],
-        }
-        if data_files:
-            manifest["data_dir"] = data_dir
-        if self._commit_manifest(manifest, require_parent=True) is None:
-            import shutil
-
-            shutil.rmtree(data_dir, ignore_errors=True)
-            return None
-        return manifest
+        return self._commit_manifest(manifest, require_parent=True)
 
     def vacuum(
         self, grace_sec: float = 72 * 3600, now: float | None = None
@@ -2271,8 +2257,6 @@ class IceliteTable:
         Metadata-only (no Spark session).  Returns a report dict;
         ``removed``/``kept_recent`` list directory names relative to
         ``data/``.  ``now`` is injectable for tests."""
-        import shutil
-
         data_root = os.path.join(self.path, "data")
         report = {"removed": [], "kept_recent": [], "referenced": 0}
         if not os.path.isdir(data_root):
@@ -2368,27 +2352,17 @@ class IceliteTable:
         # another (crash between append and a late meta write, or two
         # concurrent first builds with different n_bits) would break
         # the Bloom no-false-negative guarantee — the probe side would
-        # PRUNE files that contain the key.  Create-exclusive via
-        # os.link (the manifest-commit arbitration): the loser adopts
-        # the winner's params before building anything.  Crash after
-        # the meta write is harmless — an empty index keeps every
-        # file unindexed-kept.
-        if os.path.exists(meta_path):
+        # PRUNE files that contain the key.  Create-exclusive
+        # (_link_json, the manifest-commit arbitration): the loser
+        # adopts the winner's params before building anything.  Crash
+        # after the meta write is harmless — an empty index keeps
+        # every file unindexed-kept.
+        if os.path.exists(meta_path) or not _link_json(
+            meta_path, {"col": col, "n_bits": m, "k": kk}
+        ):
             with open(meta_path) as f:
                 meta = json.load(f)
             m, kk = meta["n_bits"], meta["k"]  # params fixed at creation
-        else:
-            tmp = meta_path + f".{uuid.uuid4().hex}.tmp"
-            with open(tmp, "w") as f:
-                json.dump({"col": col, "n_bits": m, "k": kk}, f)
-            try:
-                os.link(tmp, meta_path)
-            except FileExistsError:
-                with open(meta_path) as f:
-                    meta = json.load(f)
-                m, kk = meta["n_bits"], meta["k"]
-            finally:
-                os.unlink(tmp)
         live = self.snapshots()
         # replacement map over the FULL live chain: files a rewrite()
         # superseded are dead — enumerating them here would list them
@@ -2589,33 +2563,17 @@ class IceliteTable:
                 f"icelite table {self.path}: delete key {key_col!r} is not "
                 "a column of the current table schema"
             )
-        spark = keys.sparkSession
-        snap_n = parent["sequence"] + 1
-        delete_dir = os.path.join(
-            self.path, "data", f"snap-{snap_n}-{uuid.uuid4().hex[:8]}-deletes"
+        deletes = self._write_delete_keys(
+            keys, key_col, parent["sequence"] + 1
         )
-        keys.select(key_col).distinct().write.mode("overwrite").parquet(delete_dir)
-        n = spark.read.parquet(delete_dir).count()
-        if n == 0:
-            import shutil
-
-            shutil.rmtree(delete_dir, ignore_errors=True)
+        if deletes is None:
             return None
-        manifest = {
-            "sequence": snap_n,
-            "snapshot_id": uuid.uuid4().hex,
-            "parent_id": parent["snapshot_id"],
-            "data_files": [],
-            "bucket_rows": {},
-            "total_rows": 0,
-            "delete_key": key_col,
-            "delete_files": self._list_data_files(delete_dir),
-            "delete_count": int(n),
-            "metrics": {**(metrics or {}), "deleted_keys": int(n)},
-            "partitioning": parent.get("partitioning"),
-            "schema_id": schema["schema_id"],
-        }
-        return self._commit_manifest(manifest)
+        return self._commit_manifest(self._new_manifest(
+            parent,
+            **deletes,
+            metrics={**(metrics or {}), "deleted_keys": deletes["delete_count"]},
+            schema_id=schema["schema_id"],
+        ))
 
     def merge(
         self, df: DataFrame, key_col: str = "doc_id", **kwargs
@@ -2633,7 +2591,6 @@ class IceliteTable:
     def commit_append(
         self,
         df: DataFrame,
-        partition_col: str = "bucket",
         metrics: dict | None = None,
         metrics_provider=None,
         partitioning: dict | None = None,
@@ -2643,16 +2600,22 @@ class IceliteTable:
         delete_key: str | None = None,
         sort_within_buckets: list[str] | None = None,
     ) -> dict | None:
-        """Write ``df`` partitioned by ``partition_col`` and commit a
-        snapshot manifest recording per-bucket lineage row counts (and
-        the bucket layout, see :meth:`partitioning`).
+        """Write ``df`` partitioned by its ``bucket`` column (the
+        table's only partition column) through :meth:`_write_data` and
+        commit a snapshot manifest recording per-bucket lineage row
+        counts (and the bucket layout, see :meth:`partitioning`).
+        Empty input commits nothing and returns None.
 
-        ``compact=True`` repartitions on ``partition_col`` first: a
+        ``compact=True`` repartitions on ``bucket`` first: a
         partitionBy write from K upstream tasks otherwise emits up to
         K files PER bucket — the classic small-files problem (64 tasks
         × 1088 buckets ≈ 70k files per commit at production layout).
         The extra shuffle happens after the expensive compute and
         yields exactly one file per non-empty bucket.
+
+        ``delete_key`` makes the commit a :meth:`merge`: the equality
+        delete's keys are read back from the data files just written,
+        so ``df``'s plan runs once.
 
         ``auto_compact_every=N`` folds the table down to one snapshot
         whenever the active-snapshot count reaches N after this commit
@@ -2677,14 +2640,6 @@ class IceliteTable:
                 "publish the branch first, or commit without them"
             )
         parent = self.current_snapshot()
-        snap_n = (parent["sequence"] + 1) if parent else 0
-        # uuid-suffixed data dir: concurrent writers must never share
-        # a directory (the sequence race is settled later, at the
-        # manifest link — see _commit_manifest; reads use the
-        # manifest's file list, never the dir name)
-        data_dir = os.path.join(
-            self.path, "data", f"snap-{snap_n}-{uuid.uuid4().hex[:8]}"
-        )
 
         # schema tracking: first non-empty commit registers schema v0
         # from the frame; later commits must match the CURRENT schema
@@ -2693,14 +2648,14 @@ class IceliteTable:
         # of corrupting reads far from the cause)
         schema = self.current_schema()
         if schema is not None:
-            self._validate_append_schema(df, schema, partition_col)
+            self._validate_append_schema(df, schema)
         if delete_key is not None and delete_key not in df.columns:
             raise KeyError(
                 f"icelite table {self.path}: merge key {delete_key!r} is "
                 "not a column of the incoming frame"
             )
 
-        out = df.repartition(partition_col) if compact else df
+        out = df.repartition("bucket") if compact else df
         if sort_within_buckets:
             # Iceberg's write.sort-order: clustering rows inside each
             # file keeps the recorded min/max ranges TIGHT, which is
@@ -2712,17 +2667,10 @@ class IceliteTable:
             # the one-file-per-bucket default still gains row-group-
             # level locality.
             out = out.sortWithinPartitions(*sort_within_buckets)
-        out.write.partitionBy(partition_col).mode("overwrite").parquet(data_dir)
-
         # empty input (e.g. resume with nothing pending) writes no
-        # data files — drop the husk, no snapshot
-        data_files, bucket_rows, file_stats = self._footer_lineage(
-            data_dir, partition_col
-        )
-        if not data_files:
-            import shutil
-
-            shutil.rmtree(data_dir, ignore_errors=True)
+        # data files — no snapshot
+        data = self._write_data(out, parent["sequence"] + 1 if parent else 0)
+        if not data["data_files"]:
             return None
 
         if schema is None:
@@ -2733,13 +2681,11 @@ class IceliteTable:
             # loser gets the WINNER's v0 back and must re-validate
             # against it (both writers skipped validation above); on
             # mismatch, drop our never-referenced data dir and refuse
-            schema = self._write_schema(self._schema_from_df(df, partition_col))
+            schema = self._write_schema(self._schema_from_df(df))
             try:
-                self._validate_append_schema(df, schema, partition_col)
+                self._validate_append_schema(df, schema)
             except ValueError:
-                import shutil
-
-                shutil.rmtree(data_dir, ignore_errors=True)
+                shutil.rmtree(data["data_dir"], ignore_errors=True)
                 raise
 
         if metrics_provider is not None:
@@ -2747,32 +2693,23 @@ class IceliteTable:
             # action above has completed
             metrics = {**(metrics or {}), **metrics_provider()}
 
-        manifest = {
-            "sequence": snap_n,
-            "snapshot_id": uuid.uuid4().hex,
-            "parent_id": parent["snapshot_id"] if parent else None,
-            "data_dir": data_dir,
-            "data_files": data_files,
-            "bucket_rows": bucket_rows,
-            "total_rows": int(sum(bucket_rows.values())),
-            "metrics": metrics or {},
-            "partitioning": partitioning or (parent or {}).get("partitioning"),
-            "schema_id": schema["schema_id"],
-            "file_stats": file_stats,
-        }
+        manifest = self._new_manifest(
+            parent, **data, metrics=metrics or {}, schema_id=schema["schema_id"]
+        )
+        if partitioning:
+            manifest["partitioning"] = partitioning
         if delete_key is not None:
             # MERGE (see merge()): retract this frame's keys from all
             # strictly-lower sequences in the SAME manifest as the new
             # data files — atomic upsert, no reader can observe the
-            # retraction without the replacement
-            delete_dir = data_dir + "-deletes"
-            df.select(delete_key).distinct().write.mode("overwrite").parquet(
-                delete_dir
+            # retraction without the replacement.  The keys come from
+            # the files just written, not from a second run of df.
+            written = df.sparkSession.read.parquet(
+                *[os.path.join(self.path, f) for f in data["data_files"]]
             )
-            n_deleted = df.sparkSession.read.parquet(delete_dir).count()
-            manifest["delete_key"] = delete_key
-            manifest["delete_files"] = self._list_data_files(delete_dir)
-            manifest["delete_count"] = int(n_deleted)
+            manifest.update(
+                self._write_delete_keys(written, delete_key, manifest["sequence"])
+            )
         manifest = self._commit_manifest(manifest)
         if auto_compact_every and len(self.snapshots()) >= auto_compact_every:
             compacted = self.compact(df.sparkSession)

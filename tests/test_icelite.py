@@ -1148,3 +1148,192 @@ def test_read_without_schema_file_is_refused(spark, tmp_path):
     os.remove(os.path.join(t.manifest_dir, "schema-000000.json"))
     with pytest.raises(ValueError, match="no _icelite/schema"):
         t.read(spark)
+
+
+def _pinned_manifest(t, m):
+    """``m`` with ids dropped and uuid paths reduced to their stable
+    part (``data/snap-<n>[-deletes]/[bucket=<k>/]part``); every other
+    value is kept as written."""
+    import re
+
+    def path(p):
+        p = p[len(t.path) + 1:] if p.startswith(t.path + os.sep) else p
+        return re.sub(
+            r"^data/snap-(\d+)-[0-9a-f]{8}(-deletes)?(/bucket=\d+)?"
+            r"(/part-.*\.parquet)?$",
+            lambda g: "data/snap-" + g[1] + (g[2] or "") + (g[3] or "")
+            + ("/part" if g[4] else ""),
+            p,
+        )
+
+    out = {k: v for k, v in m.items() if not k.endswith("_id") or k == "schema_id"}
+    for k in ("data_files", "replaces"):
+        if k in out:
+            out[k] = sorted(path(p) for p in out[k])
+    if "delete_files" in out:
+        out["delete_files"] = sorted({path(p) for p in out["delete_files"]})
+    if "data_dir" in out:
+        out["data_dir"] = path(out["data_dir"])
+    if "file_stats" in out:
+        out["file_stats"] = {path(p): v for p, v in out["file_stats"].items()}
+    return out
+
+
+def test_every_commit_kind_writes_the_pinned_manifest(spark, tmp_path):
+    """Append, merge, commit_delete, rewrite, rollback and compact on
+    one table: each manifest's key set and every value that is not an
+    id, a uuid path or a timestamp, as committed."""
+    t = IceliteTable(str(tmp_path / "pin"))
+    layout = {"n_buckets": 4}
+
+    def v2(lo, hi):
+        return _df(spark, lo, hi).withColumn(
+            "text", F.concat(F.lit("v2-"), F.col("doc_id"))
+        )
+
+    a = t.commit_append(
+        _df(spark, 0, 12), metrics={"docs_parsed": 12}, partitioning=layout
+    )
+    mg = t.merge(v2(10, 14), metrics={"docs_parsed": 4})
+    d = t.commit_delete(
+        spark.createDataFrame([(0,), (5,), (5,)], "doc_id bigint"),
+        metrics={"takedown": 1},
+    )
+    rw = t.rewrite(spark, buckets={1})
+    a2 = t.commit_append(_df(spark, 20, 22), metrics={"docs_parsed": 2})
+    rb = t.rollback(rw["snapshot_id"], metrics={"reason": 7})
+    c = t.compact(spark)
+    chain = [a, mg, d, rw, a2, rb, c]
+    for prev, m in zip(chain, chain[1:]):
+        assert m["parent_id"] == prev["snapshot_id"]
+    assert rb["rollback_to_id"] == rw["snapshot_id"]
+    assert len({m["snapshot_id"] for m in chain}) == len(chain)
+
+    def text_stats(prefix, ids):
+        texts = [f"{prefix}-{i}" for i in ids]
+        return {"doc_id": [min(ids), max(ids)], "text": [min(texts), max(texts)]}
+
+    want = [
+        {
+            "sequence": 0,
+            "data_dir": "data/snap-0",
+            "data_files": [f"data/snap-0/bucket={b}/part" for b in range(4)],
+            "bucket_rows": {"0": 3, "1": 3, "2": 3, "3": 3},
+            "total_rows": 12,
+            "metrics": {"docs_parsed": 12},
+            "partitioning": layout,
+            "schema_id": 0,
+            "file_stats": {
+                f"data/snap-0/bucket={b}/part": text_stats(
+                    "text", [i for i in range(12) if i % 4 == b]
+                )
+                for b in range(4)
+            },
+        },
+        {
+            "sequence": 1,
+            "data_dir": "data/snap-1",
+            "data_files": [f"data/snap-1/bucket={b}/part" for b in range(4)],
+            "bucket_rows": {"0": 1, "1": 1, "2": 1, "3": 1},
+            "total_rows": 4,
+            "metrics": {"docs_parsed": 4},
+            "partitioning": layout,
+            "schema_id": 0,
+            "file_stats": {
+                f"data/snap-1/bucket={b}/part": text_stats(
+                    "v2", [i for i in range(10, 14) if i % 4 == b]
+                )
+                for b in range(4)
+            },
+            "delete_key": "doc_id",
+            "delete_files": ["data/snap-1-deletes/part"],
+            "delete_count": 4,
+        },
+        {
+            "sequence": 2,
+            "data_files": [],
+            "bucket_rows": {},
+            "total_rows": 0,
+            "delete_key": "doc_id",
+            "delete_files": ["data/snap-2-deletes/part"],
+            "delete_count": 2,
+            "metrics": {"takedown": 1, "deleted_keys": 2},
+            "partitioning": layout,
+            "schema_id": 0,
+        },
+        {
+            "sequence": 3,
+            "data_dir": "data/snap-3",
+            "data_files": ["data/snap-3/bucket=1/part"],
+            "bucket_rows": {"1": 3},
+            "total_rows": 3,
+            "replaces": ["data/snap-0/bucket=1/part", "data/snap-1/bucket=1/part"],
+            "rewrites_buckets": [1],
+            "metrics": {"rewritten_files": 2},
+            "partitioning": layout,
+            "file_stats": {
+                "data/snap-3/bucket=1/part": {
+                    "doc_id": [1, 13], "text": ["text-1", "v2-13"],
+                },
+            },
+            "schema_id": 0,
+        },
+        {
+            "sequence": 4,
+            "data_dir": "data/snap-4",
+            "data_files": [f"data/snap-4/bucket={b}/part" for b in (0, 1)],
+            "bucket_rows": {"0": 1, "1": 1},
+            "total_rows": 2,
+            "metrics": {"docs_parsed": 2},
+            "partitioning": layout,
+            "schema_id": 0,
+            "file_stats": {
+                f"data/snap-4/bucket={b}/part": text_stats("text", [20 + b])
+                for b in (0, 1)
+            },
+        },
+        {
+            "sequence": 5,
+            "data_files": [],
+            "bucket_rows": {},
+            "total_rows": 0,
+            "rollback_to": 3,
+            "metrics": {"reason": 7, "rolled_back_from": 4},
+            "partitioning": layout,
+            "schema_id": 0,
+        },
+        {
+            "sequence": 6,
+            "data_dir": "data/snap-6",
+            "data_files": [f"data/snap-6/bucket={b}/part" for b in range(4)],
+            "bucket_rows": {"0": 3, "1": 3, "2": 3, "3": 3},
+            "total_rows": 12,
+            "metrics": {
+                "docs_parsed": 16, "takedown": 1, "deleted_keys": 2,
+                "rewritten_files": 2, "reason": 7, "rolled_back_from": 4,
+                "compacted_snapshots": 5,
+            },
+            "partitioning": layout,
+            "compacted": True,
+            "file_stats": {
+                "data/snap-6/bucket=0/part": {
+                    "doc_id": [4, 12], "text": ["text-4", "v2-12"],
+                },
+                "data/snap-6/bucket=1/part": {
+                    "doc_id": [1, 13], "text": ["text-1", "v2-13"],
+                },
+                "data/snap-6/bucket=2/part": {
+                    "doc_id": [2, 10], "text": ["text-2", "v2-10"],
+                },
+                "data/snap-6/bucket=3/part": {
+                    "doc_id": [3, 11], "text": ["text-3", "v2-11"],
+                },
+            },
+            "schema_id": 0,
+        },
+    ]
+    got = [_pinned_manifest(t, m) for m in chain]
+    for g, w in zip(got, want):
+        assert set(g) == set(w), (g["sequence"], sorted(g), sorted(w))
+        assert g == w, g["sequence"]
+    assert [_pinned_manifest(t, m) for m in t.snapshots()] == [want[-1]]

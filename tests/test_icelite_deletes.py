@@ -105,6 +105,28 @@ def test_merge_upsert_atomic_manifest(spark, tmp_path):
     assert rows[12] == "v2-12"          # plain insert
 
 
+def test_merge_evaluates_its_input_plan_once(spark, tmp_path):
+    """merge() writes the frame once and reads its delete keys back
+    from the data files it just wrote: a Python UDF computing the key
+    runs once per input row, not once for the data and again for the
+    keys."""
+    t = IceliteTable(str(tmp_path / "t"))
+    t.commit_append(_df(spark, 0, 10))
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(i):
+        calls.add(1)
+        return i
+
+    key = F.udf(counted, "bigint")
+    src = _df(spark, 5, 15, tag="v2").withColumn("doc_id", key("doc_id"))
+    m = t.merge(src, key_col="doc_id")
+    assert calls.value == 10
+    assert m["delete_count"] == 10 and m["total_rows"] == 10
+    rows = {r["doc_id"]: r["text"] for r in t.read(spark).collect()}
+    assert len(rows) == 15 and rows[3] == "text-3" and rows[7] == "v2-7"
+
+
 def test_compact_folds_deletes(spark, tmp_path):
     t = IceliteTable(str(tmp_path / "t"))
     t.commit_append(_df(spark, 0, 100))
