@@ -808,9 +808,7 @@ def dedup_paragraphs(
     )
     return agg.select(
         F.col(id_col),
-        F.array_join(
-            F.transform(F.col("_ps"), lambda s: s["para"]), sep
-        ).alias(text_col),
+        F.array_join(F.col("_ps.para"), sep).alias(text_col),
         "n_kept",
         "n_dropped",
     )

@@ -538,7 +538,7 @@ def parse_pdf_documents(
     stage of its own."""
     return parse_pdf_interleaved(df, content_col, id_col).select(
         "doc_id",
-        F.array_join(F.transform("spans", lambda s: s["text"]), "").alias("text"),
+        F.array_join(F.col("spans.text"), "").alias("text"),
         "n_pages",
         "malformed",
     )

@@ -12,8 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .extract import explode_spans
-
 # numeric stat columns of the per-doc table (FIXTURES.md §3; column
 # order pinned by statistics/create_stats.py:35-51)
 _STAT_COLS = [
@@ -24,36 +22,6 @@ _STAT_COLS = [
     "token_length_mean", "token_length_median", "token_length_std",
     "token_length_max", "token_length_min",
 ]
-
-
-def span_rows(
-    extracted: DataFrame, tokenizer: str = "bytes", slim: bool = False
-) -> DataFrame:
-    """Exploded spans + derived columns (reference B11–B16).
-
-    ``text_length = char_end_idx - char_start_idx`` with null end
-    backfilled from start (B13, compute_aggregate_stats.py:52-54);
-    ``self_closing = (end == start)``; span text sliced from the doc
-    text (B15) and token length from the pluggable tokenizer (B16).
-    Tokenizers: ``"bpe"`` = the engine's self-contained subword BPE
-    (operators/bpe.py — the reference's GPT-2 tokenizer is
-    offline-unavailable, this is the closest public-knowledge stand-
-    in); ``"bytes"`` (utf-8 length) and ``"whitespace"`` (split count)
-    remain as cheap proxies.
-    """
-    # Span-text slicing happens in an Arrow-batched Python stage, not
-    # in JVM expressions: two prior shapes were measured and rejected —
-    # (a) explode-then-substring duplicates the full document text
-    # into every span row (a 1 MB doc with 40k spans materializes
-    # ~40 GB through Generate); (b) substring() inside an array
-    # transform avoids the duplication but UTF8String.substringSQL
-    # seeks the char offset by scanning, O(text_len) per span →
-    # O(spans × text_len) per giant doc.  CPython slicing is O(slice)
-    # with O(1) indexing, so one pass over each doc's spans is linear.
-    if tokenizer not in ("bytes", "whitespace", "bpe", "bpe_fixpoint"):
-        raise ValueError(f"unknown tokenizer {tokenizer!r}")
-    return _span_rows_vectorized(extracted, tokenizer, slim)
-
 
 _SPAN_ROW_SCHEMA = (
     "doc_id string, tag string, char_start_idx int, char_end_idx int, "
@@ -71,16 +39,27 @@ _UNICODE_WS = (
 )
 
 
-def _span_rows_vectorized(
-    extracted: DataFrame, tokenizer: str, slim: bool = False
+def span_rows(
+    extracted: DataFrame, tokenizer: str = "bytes", slim: bool = False
 ) -> DataFrame:
-    """``span_rows`` with no per-span Python dict walk, any tokenizer.
+    """Exploded spans + derived columns (reference B11–B16).
 
-    Spans' start/end/tag arrive as per-doc ARRAYS (JVM ``transform``
-    pre-projection), so the batch loop is per doc, not per span.  The
-    per-span struct walk was the allocation hot spot of the stats
-    bench (≈1.4 M spans / 750 docs): numpy gathers cut it ~4× and
-    remove the allocator-pressure creep across repeats.
+    ``text_length = char_end_idx - char_start_idx`` with null end
+    backfilled from start (B13, compute_aggregate_stats.py:52-54);
+    ``self_closing = (end == start)``; span text sliced from the doc
+    text (B15) and token length from the pluggable tokenizer (B16).
+    Tokenizers: ``"bpe"`` = the engine's self-contained subword BPE
+    (operators/bpe.py — the reference's GPT-2 tokenizer is
+    offline-unavailable, this is the closest public-knowledge stand-
+    in); ``"bytes"`` (utf-8 length) and ``"whitespace"`` (split count)
+    remain as cheap proxies.
+
+    Spans' start/end/tag arrive as per-doc ARRAYS (``spans.value``
+    field projections: nested-schema pruning pushes them into the scan,
+    which reads 3 of the 12 span fields), so the batch loop is per doc,
+    not per span.  The per-span struct walk was the allocation hot spot
+    of the stats bench (≈1.4 M spans / 750 docs): numpy gathers cut it
+    ~4× and remove the allocator-pressure creep across repeats.
 
     token_length per tokenizer:
 
@@ -98,6 +77,18 @@ def _span_rows_vectorized(
       and only ``count_tokens`` runs per span, over a zip of the
       clipped numpy bounds.
     """
+    # Span-text slicing happens in an Arrow-batched Python stage, not
+    # in JVM expressions: two prior shapes were measured and rejected —
+    # (a) explode-then-substring duplicates the full document text
+    # into every span row (a 1 MB doc with 40k spans materializes
+    # ~40 GB through Generate); (b) substring() inside an array
+    # transform avoids the duplication but UTF8String.substringSQL
+    # seeks the char offset by scanning, O(text_len) per span →
+    # O(spans × text_len) per giant doc.  CPython slicing is O(slice)
+    # with O(1) indexing, so one pass over each doc's spans is linear.
+    if tokenizer not in ("bytes", "whitespace", "bpe", "bpe_fixpoint"):
+        raise ValueError(f"unknown tokenizer {tokenizer!r}")
+
     from typing import Iterator
 
     import numpy as np
@@ -120,9 +111,9 @@ def _span_rows_vectorized(
     pre = extracted.select(
         "doc_id",
         "text",
-        F.transform("spans", lambda s: s["value"]).alias("tags"),
-        F.transform("spans", lambda s: s["char_start_idx"]).alias("starts"),
-        F.transform("spans", lambda s: s["char_end_idx"]).alias("ends"),
+        F.col("spans.value").alias("tags"),
+        F.col("spans.char_start_idx").alias("starts"),
+        F.col("spans.char_end_idx").alias("ends"),
     )
 
     def slice_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -229,26 +220,27 @@ def _span_rows_vectorized(
 
 def span_stats(extracted: DataFrame, tokenizer: str = "bytes") -> DataFrame:
     """Per-(doc, tag) statistics (reference phase 1, B18/B19;
-    compute_aggregate_stats.py:72-90).  Exact median to match pandas."""
+    compute_aggregate_stats.py:72-90).  Exact median to match pandas;
+    ``self_closing`` is the ratio of self-closing spans (B19,
+    compute_aggregate_stats.py:88-90).  One SQL statement: one parse
+    and analysis instead of a Column-API round trip per expression."""
     rows = span_rows(extracted, tokenizer, slim=True)
-    agg = rows.groupBy("doc_id", "tag").agg(
-        F.count("*").alias("count_per_doc"),
-        F.avg("text_length").alias("text_length_mean"),
-        F.median("text_length").alias("text_length_median"),
-        F.stddev("text_length").alias("text_length_std"),
-        F.max("text_length").alias("text_length_max"),
-        F.min("text_length").alias("text_length_min"),
-        F.sum("self_closing").alias("self_closing_sum"),
-        F.avg("token_length").alias("token_length_mean"),
-        F.median("token_length").alias("token_length_median"),
-        F.stddev("token_length").alias("token_length_std"),
-        F.max("token_length").alias("token_length_max"),
-        F.min("token_length").alias("token_length_min"),
+    return rows.sparkSession.sql(
+        """SELECT doc_id, tag, count(*) AS count_per_doc,
+             avg(text_length) AS text_length_mean,
+             median(text_length) AS text_length_median,
+             stddev(text_length) AS text_length_std,
+             max(text_length) AS text_length_max,
+             min(text_length) AS text_length_min,
+             avg(token_length) AS token_length_mean,
+             median(token_length) AS token_length_median,
+             stddev(token_length) AS token_length_std,
+             max(token_length) AS token_length_max,
+             min(token_length) AS token_length_min,
+             CAST(sum(self_closing) / count(*) AS double) AS self_closing
+           FROM {rows} GROUP BY doc_id, tag""",
+        rows=rows,
     )
-    # self_closing ratio (B19, compute_aggregate_stats.py:88-90)
-    return agg.withColumn(
-        "self_closing", (F.col("self_closing_sum") / F.col("count_per_doc")).cast("double")
-    ).drop("self_closing_sum")
 
 
 # the reference's per-webpage stats CSV layout: headerless, 14
@@ -269,26 +261,19 @@ def tag_stats(per_doc: DataFrame) -> DataFrame:
     """Corpus-level describe() per tag (reference phase 2, B20;
     compute_aggregate_stats.py:134-136): count/mean/std/min/p25/p50/
     p75/max for every numeric column, one output row per (tag, stat
-    column) — a long-format describe that one groupBy computes."""
-    stacked = per_doc.select(
-        "tag",
-        F.expr(
-            "stack({n}, {pairs}) as (stat_col, value)".format(
-                n=len(_STAT_COLS),
-                pairs=", ".join(f"'{c}', cast({c} as double)" for c in _STAT_COLS),
-            )
-        ),
-    )
-    return (
-        stacked.groupBy("tag", "stat_col")
-        .agg(
-            F.count("value").alias("count"),
-            F.avg("value").alias("mean"),
-            F.stddev("value").alias("std"),
-            F.min("value").alias("min"),
-            F.percentile("value", F.lit(0.25)).alias("p25"),
-            F.percentile("value", F.lit(0.50)).alias("p50"),
-            F.percentile("value", F.lit(0.75)).alias("p75"),
-            F.max("value").alias("max"),
-        )
+    column) — a long-format describe that one groupBy computes, with
+    the three quartiles from one percentile buffer per group."""
+    pairs = ", ".join(f"'{c}', CAST({c} AS double)" for c in _STAT_COLS)
+    return per_doc.sparkSession.sql(
+        f"""SELECT tag, stat_col, `count`, mean, std, `min`,
+             q[0] AS p25, q[1] AS p50, q[2] AS p75, `max`
+           FROM (SELECT tag, stat_col, count(value) AS `count`,
+                   avg(value) AS mean, stddev(value) AS std,
+                   min(value) AS `min`,
+                   percentile(value, array(0.25, 0.5, 0.75)) AS q,
+                   max(value) AS `max`
+                 FROM (SELECT tag, stack({len(_STAT_COLS)}, {pairs})
+                         AS (stat_col, value) FROM {{per_doc}})
+                 GROUP BY tag, stat_col)""",
+        per_doc=per_doc,
     )

@@ -145,6 +145,18 @@ def _link_json(path: str, obj) -> bool:
         os.remove(tmp)
 
 
+def _ddl(fields: list[dict]) -> str:
+    return ", ".join(f"`{f['name']}` {f['type']}" for f in fields)
+
+
+def _read_files(spark, files: list[str], fields: list[dict]) -> DataFrame:
+    """THE read of a table's own data and delete files, with ``fields``
+    (recorded ``{"name", "type"}`` entries) as the read schema: a
+    ``spark.read.parquet`` without one runs a Spark job to infer the
+    schema from a footer."""
+    return spark.read.schema(_ddl(fields)).parquet(*files)
+
+
 def _file_may_match(stats: dict | None, prune, rename: dict) -> bool:
     """Conjunction of ``prune`` predicates against one file's recorded
     column bounds.  ``rename`` maps CURRENT column names to the
@@ -1062,8 +1074,7 @@ class IceliteTable:
         lineage column) — the readable state of a fully-deleted,
         compacted table."""
         cur = self._committed_schemas()[-1]
-        ddl = ", ".join(f"`{f['name']}` {f['type']}" for f in cur["fields"])
-        return spark.createDataFrame([], schema=ddl + ", `bucket` int")
+        return spark.createDataFrame([], schema=_ddl(cur["fields"]) + ", `bucket` int")
 
     def _scan_snaps(
         self,
@@ -1095,10 +1106,7 @@ class IceliteTable:
         Returns None when no file survives."""
         schemas = self._committed_schemas()
         current = schemas[-1]
-        phys_by_sid = {
-            s["schema_id"]: {f["id"]: f["name"] for f in s["fields"]}
-            for s in schemas
-        }
+        by_sid = {s["schema_id"]: s for s in schemas}
         legacy_sid = schemas[0]["schema_id"]
         cur_ids = {f["name"]: f["id"] for f in current["fields"]}
         if drop is None:
@@ -1106,7 +1114,7 @@ class IceliteTable:
         by_schema: dict[int, list[str]] = {}
         for s in snaps:
             sid = s.get("schema_id", legacy_sid)
-            phys = phys_by_sid[sid]
+            phys = {f["id"]: f["name"] for f in by_sid[sid]["fields"]}
             files = self._live_files(s, drop)
             if buckets is not None:
                 files = [
@@ -1133,19 +1141,19 @@ class IceliteTable:
                 by_schema.setdefault(sid, []).extend(files)
         out = None
         for sid, files in sorted(by_schema.items()):
-            phys = phys_by_sid[sid]
+            phys = {f["id"]: f["name"] for f in by_sid[sid]["fields"]}
             cols = [
-                F.col(phys[f["id"]]).alias(f["name"]) if f["id"] in phys
+                f"`{phys[f['id']]}` AS `{f['name']}`" if f["id"] in phys
                 # column added after this snapshot was written
-                else F.lit(None).cast(f["type"]).alias(f["name"])
+                else f"CAST(NULL AS {f['type']}) AS `{f['name']}`"
                 for f in current["fields"]
             ]
             cols.append(
-                F.regexp_extract(
-                    F.input_file_name(), r"bucket=(\d+)", 1
-                ).cast("int").alias("bucket")
+                "CAST(regexp_extract(input_file_name(), 'bucket=([0-9]+)', 1)"
+                " AS int) AS bucket"
             )
-            part = spark.read.parquet(*files).select(*cols)
+            part = _read_files(spark, files, by_sid[sid]["fields"])
+            part = part.selectExpr(*cols)
             out = part if out is None else out.unionByName(part)
         return out
 
@@ -1158,32 +1166,36 @@ class IceliteTable:
         exposes.  A manifest without ``schema_id`` resolves via the
         newest schema that knows the name, since a later rename chain
         can legally re-introduce the old name for a DIFFERENT field
-        id."""
+        id.  A name no schema maps stays as it is."""
         schemas = self._committed_schemas()
-        cur = schemas[-1]
-        src = None
-        if schema_id is not None:
-            src = next(
-                (s for s in schemas if s["schema_id"] == schema_id), None
-            )
-        if src is None:
-            src = next(
-                (
-                    s for s in reversed(schemas)
-                    if any(f["name"] == name for f in s["fields"])
-                ),
-                None,
-            )
-        if src is None:
-            return name
-        fid = next(
-            (f["id"] for f in src["fields"] if f["name"] == name), None
+        src = next(
+            (s for s in schemas if s["schema_id"] == schema_id), None
+        ) or next(
+            (s for s in reversed(schemas)
+             if any(f["name"] == name for f in s["fields"])),
+            {"fields": []},
         )
-        if fid is None:
-            return name
+        fid = next((f["id"] for f in src["fields"] if f["name"] == name), None)
         return next(
-            (f["name"] for f in cur["fields"] if f["id"] == fid), name
+            (f["name"] for f in schemas[-1]["fields"] if f["id"] == fid), name
         )
+
+    def _column_type(self, name: str) -> str:
+        """The recorded type of column ``name`` of the current schema."""
+        return next(
+            f["type"] for f in self._committed_schemas()[-1]["fields"]
+            if f["name"] == name
+        )
+
+    def _read_delete_keys(
+        self, spark, files: list[str], phys: str, cur: str
+    ) -> DataFrame:
+        """Equality-delete files keyed on the write-time name ``phys``,
+        read with the key's recorded type and aliased to its current
+        name ``cur``."""
+        return _read_files(
+            spark, files, [{"name": phys, "type": self._column_type(cur)}]
+        ).selectExpr(f"`{phys}` AS `{cur}`")
 
     def _anti_join_deletes(
         self, spark, df: DataFrame, del_snaps: list[dict]
@@ -1218,9 +1230,7 @@ class IceliteTable:
             for (cur, phys), files in sorted(by_key.items()):
                 if cur != key_col:
                     continue
-                part = spark.read.parquet(*files).select(
-                    F.col(phys).alias(cur)
-                )
+                part = self._read_delete_keys(spark, files, phys, cur)
                 keys = part if keys is None else keys.unionByName(part)
             if counts[key_col] <= self.BROADCAST_DELETE_MAX:
                 keys = F.broadcast(keys)
@@ -1298,8 +1308,9 @@ class IceliteTable:
         degrades at thousands of snapshots (long incremental jobs).
         Now the manifests provide the file list (like an Iceberg
         manifest list) and :meth:`_scan_snaps` puts the files of each
-        schema version into one ``spark.read.parquet(*files)`` — flat
-        read, no partition discovery — projected to the current schema
+        schema version into one :func:`_read_files` scan — flat read
+        with the recorded schema, no partition discovery and no
+        schema-inference job — projected to the current schema
         by field id, with the ``bucket`` lineage column rebuilt from
         the ``bucket=<k>`` path component (a zero-shuffle projection).
         Every manifest records ``data_files`` and a table with a
@@ -1533,9 +1544,11 @@ class IceliteTable:
             if live is None:
                 continue
             cur = self._current_name_for(d["delete_key"], d.get("schema_id"))
-            keys = spark.read.parquet(
-                *[os.path.join(self.path, p) for p in d["delete_files"]]
-            ).select(F.col(d["delete_key"]).alias(cur))
+            keys = self._read_delete_keys(
+                spark,
+                [os.path.join(self.path, p) for p in d["delete_files"]],
+                d["delete_key"], cur,
+            )
             hit = live.join(F.broadcast(keys), on=cur, how="left_semi")
             parts.append(
                 hit.withColumn(
@@ -1753,22 +1766,22 @@ class IceliteTable:
         self, keys: DataFrame, key_col: str, snap_n: int
     ) -> dict | None:
         """THE equality-delete write (commit_delete and merge): the
-        distinct ``key_col`` values of ``keys`` into a fresh
-        ``-deletes`` dir, and the manifest fields recording them —
-        or None, with the dir removed, when there are no keys."""
+        distinct ``key_col`` values of ``keys``, cast to the column's
+        recorded type, into a fresh ``-deletes`` dir, and the manifest
+        fields recording them, counted from the parquet footers — or
+        None, with the dir removed, when there are no keys."""
+        import pyarrow.parquet as pq
+
         delete_dir = self._new_data_dir(snap_n) + "-deletes"
-        keys.select(key_col).distinct().write.mode("overwrite").parquet(
-            delete_dir
-        )
-        n = keys.sparkSession.read.parquet(delete_dir).count()
+        keys.select(
+            F.col(key_col).cast(self._column_type(key_col)).alias(key_col)
+        ).distinct().write.mode("overwrite").parquet(delete_dir)
+        files = self._list_data_files(delete_dir)
+        n = sum(pq.read_metadata(os.path.join(self.path, f)).num_rows for f in files)
         if n == 0:
             shutil.rmtree(delete_dir, ignore_errors=True)
             return None
-        return {
-            "delete_key": key_col,
-            "delete_files": self._list_data_files(delete_dir),
-            "delete_count": int(n),
-        }
+        return {"delete_key": key_col, "delete_files": files, "delete_count": n}
 
     def _new_manifest(self, parent: dict | None, **fields) -> dict:
         """A manifest for the commit after ``parent`` (None: the
@@ -2704,8 +2717,10 @@ class IceliteTable:
             # data files — atomic upsert, no reader can observe the
             # retraction without the replacement.  The keys come from
             # the files just written, not from a second run of df.
-            written = df.sparkSession.read.parquet(
-                *[os.path.join(self.path, f) for f in data["data_files"]]
+            written = _read_files(
+                df.sparkSession,
+                [os.path.join(self.path, f) for f in data["data_files"]],
+                schema["fields"],
             )
             manifest.update(
                 self._write_delete_keys(written, delete_key, manifest["sequence"])

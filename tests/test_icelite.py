@@ -40,6 +40,26 @@ def test_commit_read_lineage(spark, tmp_path):
         assert len(files) == 1, (b, files)
 
 
+def test_read_starts_no_spark_job_before_its_action(spark, tmp_path):
+    """read() builds its plan from the manifests and the recorded
+    schema: neither the data scan nor the delete-key scan runs a Spark
+    job to infer a schema from a parquet footer."""
+    import uuid
+
+    t = IceliteTable(str(tmp_path / "tbl"))
+    t.commit_append(_df(spark, 0, 100))
+    t.commit_delete(spark.createDataFrame([(3,), (7,)], "doc_id bigint"))
+    sc = spark.sparkContext
+    group = f"icelite-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read plan only")
+    try:
+        back = t.read(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert back.count() == 98
+
+
 def _bucket_counts(df):
     return {str(r["bucket"]): r["count"] for r in df.groupBy("bucket").count().collect()}
 

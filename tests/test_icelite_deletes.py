@@ -127,6 +127,36 @@ def test_merge_evaluates_its_input_plan_once(spark, tmp_path):
     assert len(rows) == 15 and rows[3] == "text-3" and rows[7] == "v2-7"
 
 
+def test_commit_delete_runs_no_spark_job_after_its_write(
+    spark, tmp_path, monkeypatch
+):
+    """commit_delete counts the keys it wrote from the parquet footers:
+    once the key write has run, the commit starts no Spark job (a
+    read-back of the delete dir would infer its schema and count)."""
+    import uuid
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    t = IceliteTable(str(tmp_path / "t"))
+    t.commit_append(_df(spark, 0, 10))
+    sc = spark.sparkContext
+    group = f"after-delete-write-{uuid.uuid4().hex}"
+    write = DataFrameWriter.parquet
+
+    def write_then_group(self, *args, **kwargs):
+        write(self, *args, **kwargs)
+        sc.setJobGroup(group, "jobs after the delete-key write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_group)
+    try:
+        d = t.commit_delete(_keys(spark, [3, 4]), key_col="doc_id")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert d["delete_count"] == 2
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert t.read(spark).count() == 8
+
+
 def test_compact_folds_deletes(spark, tmp_path):
     t = IceliteTable(str(tmp_path / "t"))
     t.commit_append(_df(spark, 0, 100))

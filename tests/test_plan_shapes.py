@@ -269,6 +269,43 @@ def test_read_changes_plan_broadcast_file_map(spark, tmp_path):
     assert "Exchange" not in plan.replace("BroadcastExchange", "BX"), plan
 
 
+def test_stats_readback_scan_reads_three_span_fields(spark, tmp_path):
+    """The stats readback, tag_stats(span_stats(read)), uses three of
+    the twelve span fields; nested-schema pruning must carry that down
+    to the parquet scan, so the attrs/attr_values lists and the other
+    span strings are never read."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from mini_html_parser_spark.operators import stats
+    from mini_html_parser_spark.operators.extract import EXTRACTED_SCHEMA
+    from mini_html_parser_spark.plans.icelite import IceliteTable
+
+    span = ("k", "tag", 0, 0, 5, 0, "p", ["class"], ["x"], "text", None, None)
+    extracted = spark.createDataFrame(
+        [("d1", "hello world", [span], 1, False, 11)], EXTRACTED_SCHEMA
+    ).withColumn("bucket", F.lit(0))
+    t = IceliteTable(str(tmp_path / "t"))
+    t.commit_append(extracted)
+
+    out = stats.tag_stats(stats.span_stats(t.read(spark)))
+    leaves = out._jdf.queryExecution().sparkPlan().collectLeaves()
+    scans = [
+        leaves.apply(i) for i in range(leaves.length())
+        if leaves.apply(i).getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+    assert len(scans) == 1, [leaves.apply(i).nodeName() for i in range(leaves.length())]
+    fields = {
+        f["name"]: f["type"]
+        for f in json.loads(scans[0].requiredSchema().json())["fields"]
+    }
+    assert set(fields) == {"doc_id", "text", "spans"}
+    assert {f["name"] for f in fields["spans"]["elementType"]["fields"]} == {
+        "char_start_idx", "char_end_idx", "value",
+    }
+
+
 def test_pack_interleaved_single_window_exchange(spark, sf_exists):
     """Interleaved MM packing: one posexplode (narrow) + ONE window
     exchange on the loader partition column — never a global sort."""

@@ -71,6 +71,36 @@ def test_stats_per_doc_csv_roundtrip(spark, tmp_path):
     assert described.count() > 0
 
 
+def test_span_stats_and_tag_stats_keep_their_schema(spark):
+    """Both stats levels keep every column's name, type and position
+    (the per-doc CSV layout and the describe() rows are read by
+    position downstream)."""
+    from mini_html_parser_spark.operators.stats import span_stats
+
+    df = spark.createDataFrame(
+        [("d1", "hello world", [("p", 0, 5), ("br", 6, 6)])],
+        "doc_id string, text string, spans array<struct<value:string,"
+        "char_start_idx:int,char_end_idx:int>>",
+    )
+    per_doc = span_stats(df)
+    assert [(f.name, f.dataType.simpleString()) for f in per_doc.schema] == [
+        ("doc_id", "string"), ("tag", "string"), ("count_per_doc", "bigint"),
+        *[(f"{m}_{s}", "double")
+          for m in ("text_length", "token_length")
+          for s in ("mean", "median", "std", "max", "min")],
+        ("self_closing", "double"),
+    ]
+    described = tag_stats(per_doc)
+    assert [(f.name, f.dataType.simpleString()) for f in described.schema] == [
+        ("tag", "string"), ("stat_col", "string"), ("count", "bigint"),
+        *[(c, "double")
+          for c in ("mean", "std", "min", "p25", "p50", "p75", "max")],
+    ]
+    rows = {(r["tag"], r["stat_col"]): r for r in described.collect()}
+    assert rows[("br", "self_closing")]["p50"] == 1.0
+    assert rows[("p", "text_length_max")]["max"] == 5.0
+
+
 def test_span_rows_bytes_vectorized_parity(spark):
     """The numpy utf8-cumsum path must equal a plain-Python
     `len(text[a:b].encode())` recomputation on unicode-heavy docs with
