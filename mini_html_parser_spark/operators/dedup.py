@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import LongType
 
+from .. import bloom as bloom_layout
+
 # Buckets above this size emit (bucket-min representative → member)
 # star edges instead of all intra-bucket pairs.  On web-crawl corpora a
 # boilerplate page duplicated d=10⁶ times would otherwise explode one
@@ -1017,11 +1019,7 @@ def build_text_bloom(
     rebuilt."""
     import numpy as np
 
-    # the bitmap is m//8 BYTES but positions range over [0, m): for
-    # m % 8 != 0 a position in the final partial byte would index out
-    # of bounds inside the executor UDF (ADVICE r5) — round m up to a
-    # byte multiple (a few extra always-zero bits only lower the fpp)
-    m = (int(n_bits) + 7) & ~7
+    m = bloom_layout.round_bits(n_bits)
     merged = np.zeros(m // 8, dtype=np.uint8)
     bloom_accumulate(merged, corpus_df, text_col=text_col, k=k)
     return merged.tobytes(), m, k
@@ -1040,30 +1038,17 @@ def bloom_accumulate(
     lifetime — same double-hashing construction as the builder)."""
     import numpy as np
 
-    m = len(bitmap) * 8
-
-    hashes = _spread(df).select(
-        F.xxhash64(F.col(text_col)).alias("h1"),
-        F.xxhash64(F.col(text_col), F.lit(1)).alias("h2"),
-    )
+    n_bytes = len(bitmap)
+    hashes = _spread(df).select(*bloom_layout.hash_pair(F.col(text_col)))
 
     def part_bitmap(batches):
-        bits = np.zeros(m // 8, dtype=np.uint8)
+        bits = np.zeros(n_bytes, dtype=np.uint8)
         any_rows = False
         for pdf in batches:
             if not len(pdf):
                 continue
             any_rows = True
-            h1 = pdf["h1"].to_numpy().astype(np.uint64)
-            h2 = pdf["h2"].to_numpy().astype(np.uint64)
-            for i in range(k):
-                pos = (h1 + np.uint64(i) * h2) % np.uint64(m)
-                np.bitwise_or.at(
-                    bits, (pos >> np.uint64(3)).astype(np.int64),
-                    np.left_shift(
-                        np.uint8(1), (pos & np.uint64(7)).astype(np.uint8)
-                    ),
-                )
+            bloom_layout.add(bits, pdf["h1"], pdf["h2"], k)
         if any_rows:
             yield pd.DataFrame({"bm": [bits.tobytes()]})
 
@@ -1100,28 +1085,15 @@ def dedup_against_bloom(
     a SUPERSET of the corpus (stale-but-inclusive after takedowns):
     extra bits only send more rows to the exact join, never change
     the result."""
-    import numpy as np
-
-    if bloom is not None:
-        bm_bytes, m, kk = bloom
-    else:
-        bm_bytes, m, kk = build_text_bloom(corpus_df, text_col, n_bits, k)
+    if bloom is None:
+        bloom = build_text_bloom(corpus_df, text_col, n_bits, k)
+    bm_bytes, _m, kk = bloom
     spark = new_df.sparkSession
     bm_bc = spark.sparkContext.broadcast(bm_bytes)
 
     @F.pandas_udf("boolean")
     def might_contain(h1: pd.Series, h2: pd.Series) -> pd.Series:
-        bits = np.frombuffer(bm_bc.value, dtype=np.uint8)
-        a = h1.to_numpy().astype(np.uint64)
-        b = h2.to_numpy().astype(np.uint64)
-        hit = np.ones(len(a), dtype=bool)
-        for i in range(kk):
-            pos = (a + np.uint64(i) * b) % np.uint64(m)
-            byte = bits[(pos >> np.uint64(3)).astype(np.int64)]
-            hit &= (byte & np.left_shift(
-                np.uint8(1), (pos & np.uint64(7)).astype(np.uint8)
-            )) != 0
-        return pd.Series(hit)
+        return pd.Series(bloom_layout.might_contain(bm_bc.value, h1, h2, kk))
 
     w = new_df
     if within_batch:
@@ -1130,9 +1102,9 @@ def dedup_against_bloom(
         w = w.join(keep, [id_col, "content_hash"], "left_semi").drop(
             "content_hash"
         )
-    w = w.withColumn("_bh1", F.xxhash64(F.col(text_col))).withColumn(
-        "_bh2", F.xxhash64(F.col(text_col), F.lit(1))
-    ).withColumn("_might", might_contain(F.col("_bh1"), F.col("_bh2")))
+    w = w.withColumn(
+        "_might", might_contain(*bloom_layout.hash_pair(F.col(text_col)))
+    )
     # the definite-new / candidate routes form a self-union, and
     # Catalyst recomputes an unshared subtree once PER BRANCH (hash +
     # bloom UDF + keep-min semi-join, explain-verified).
@@ -1154,7 +1126,7 @@ def dedup_against_bloom(
         .join(corpus_hashes, "content_hash", "left_anti")
         .drop("content_hash")
     )
-    return definite_new.unionByName(survivors).drop("_bh1", "_bh2", "_might")
+    return definite_new.unionByName(survivors).drop("_might")
 
 
 def keep_best_in_cluster(

@@ -10,7 +10,7 @@ aggregation, no materialization between phases.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 # numeric stat columns of the per-doc table (FIXTURES.md §3; column
 # order pinned by statistics/create_stats.py:35-51)
@@ -108,12 +108,12 @@ def span_rows(
 
     ws_codes = np.asarray(_UNICODE_WS, dtype=np.uint32)
 
-    pre = extracted.select(
+    pre = extracted.selectExpr(
         "doc_id",
         "text",
-        F.col("spans.value").alias("tags"),
-        F.col("spans.char_start_idx").alias("starts"),
-        F.col("spans.char_end_idx").alias("ends"),
+        "spans.value AS tags",
+        "spans.char_start_idx AS starts",
+        "spans.char_end_idx AS ends",
     )
 
     def slice_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

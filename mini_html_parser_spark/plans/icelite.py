@@ -61,6 +61,8 @@ import uuid
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import bloom
+
 # column types whose parquet-footer min/max are JSON-representable and
 # totally ordered — the ones file_stats records (timestamps/decimals/
 # binary are skipped: not comparable once round-tripped through JSON)
@@ -94,20 +96,6 @@ def _bounds_may_satisfy(lo, hi, op, vals) -> bool:
     except TypeError:
         return True
     return True  # unknown operator: never prune
-
-
-def _bloom_might_contain(bm: bytes, m: int, k: int, h1: int, h2: int) -> bool:
-    """Driver-side membership probe against one file's bitmap — the
-    exact mirror of the executor-side build in :meth:`index_keys`
-    (same double-hashing positions over the same JVM xxhash64 pair;
-    the Python arithmetic masks to uint64 to match numpy's wrap)."""
-    u1 = h1 & 0xFFFFFFFFFFFFFFFF
-    u2 = h2 & 0xFFFFFFFFFFFFFFFF
-    for i in range(k):
-        pos = ((u1 + i * u2) & 0xFFFFFFFFFFFFFFFF) % m
-        if not bm[pos >> 3] & (1 << (pos & 7)):
-            return False
-    return True
 
 
 def _parquet_dir_readable(path: str) -> bool:
@@ -150,11 +138,25 @@ def _ddl(fields: list[dict]) -> str:
 
 
 def _read_files(spark, files: list[str], fields: list[dict]) -> DataFrame:
-    """THE read of a table's own data and delete files, with ``fields``
-    (recorded ``{"name", "type"}`` entries) as the read schema: a
-    ``spark.read.parquet`` without one runs a Spark job to infer the
-    schema from a footer."""
+    """THE read of a table's own data, delete and key-index files, with
+    ``fields`` (recorded ``{"name", "type"}`` entries) as the read
+    schema: a ``spark.read.parquet`` without one runs a Spark job to
+    infer the schema from a footer."""
     return spark.read.schema(_ddl(fields)).parquet(*files)
+
+
+# a key-index sidecar row: one data file's key (:func:`_index_file_key`)
+# and its Bloom bitmap
+_SIDECAR_FIELDS = [
+    {"name": "f", "type": "string"},
+    {"name": "bm", "type": "binary"},
+]
+
+
+def _index_file_key(path: str) -> str:
+    """A data file's key in the key-index sidecar: its last three path
+    components (``<snapshot dir>/bucket=<k>/<part file>``)."""
+    return "/".join(os.path.normpath(path).split(os.sep)[-3:])
 
 
 def _file_may_match(stats: dict | None, prune, rename: dict) -> bool:
@@ -2344,9 +2346,9 @@ class IceliteTable:
         ``col``: one bitmap per data file (default 16 KB — size
         ``n_bits ≈ 10×`` the max rows per file for ~1% false
         positives), built distributed in one pass over the not-yet-
-        indexed snapshots (JVM ``xxhash64`` pair per row, bitmaps
-        assembled per file in ``applyInPandas`` — only (file, 16 KB)
-        rows ever reach the sidecar).  The sidecar is parquet under
+        indexed files (:func:`bloom.hash_pair` per row, bitmaps
+        assembled per file by :func:`bloom.add` in ``applyInPandas`` —
+        only (file, 16 KB) rows ever reach the sidecar).  The sidecar is parquet under
         ``_icelite/bloomidx-<col>/`` plus a params json; re-running
         after new commits indexes ONLY the new snapshots' files.
 
@@ -2359,7 +2361,7 @@ class IceliteTable:
 
         Returns ``{"indexed_files": new, "total_files": all}``."""
         meta_path, idx_dir = self._key_index_paths(col)
-        m, kk = (int(n_bits) + 7) & ~7, int(k)
+        m, kk = bloom.round_bits(n_bits), int(k)
         # Params must be durable BEFORE any bitmap lands in the
         # sidecar: bitmaps appended under one m but probed under
         # another (crash between append and a late meta write, or two
@@ -2387,25 +2389,21 @@ class IceliteTable:
         if _parquet_dir_readable(idx_dir):
             done = {
                 r["f"]
-                for r in spark.read.parquet(idx_dir).select("f").collect()
+                for r in _read_files(spark, [idx_dir], _SIDECAR_FIELDS)
+                .select("f").collect()
             }
-        total = 0
-        todo_snaps = []
-        for s in snaps:
-            fs = self._live_files(s, drop)
-            total += len(fs)
-            missing = [
-                f for f in fs
-                if "/".join(os.path.normpath(f).split(os.sep)[-3:]) not in done
-            ]
-            if missing:
-                todo_snaps.append(s)
-        if not todo_snaps:
-            return {"indexed_files": 0, "total_files": total}
-        scan = self._scan_snaps(spark, todo_snaps, drop=drop)
+        files = [f for s in snaps for f in self._live_files(s, drop)]
+        # scan only the files without a bitmap, so the sidecar never
+        # holds two bitmaps for one file
+        missing = {_index_file_key(f) for f in files} - done
+        if not missing:
+            return {"indexed_files": 0, "total_files": len(files)}
+        scan = self._scan_snaps(
+            spark, snaps, drop=drop,
+            file_filter=lambda f: _index_file_key(f) in missing,
+        )
         hashes = scan.select(
-            F.xxhash64(F.col(col)).alias("h1"),
-            F.xxhash64(F.col(col), F.lit(1)).alias("h2"),
+            *bloom.hash_pair(F.col(col)),
             F.regexp_extract(
                 F.input_file_name(), r"([^/]+/[^/]+/[^/]+)$", 1
             ).alias("f"),
@@ -2416,43 +2414,24 @@ class IceliteTable:
             import pandas as pd
 
             bits = np.zeros(m // 8, dtype=np.uint8)
-            h1 = pdf["h1"].to_numpy().astype(np.uint64)
-            h2 = pdf["h2"].to_numpy().astype(np.uint64)
-            for i in range(kk):
-                pos = (h1 + np.uint64(i) * h2) % np.uint64(m)
-                np.bitwise_or.at(
-                    bits,
-                    (pos >> np.uint64(3)).astype(np.int64),
-                    np.left_shift(
-                        np.uint8(1), (pos & np.uint64(7)).astype(np.uint8)
-                    ),
-                )
+            bloom.add(bits, pdf["h1"], pdf["h2"], kk)
             return pd.DataFrame({"f": [key[0]], "bm": [bits.tobytes()]})
 
-        new_bitmaps = hashes.groupBy("f").applyInPandas(
-            _group_bitmap, "f string, bm binary"
-        )
-        # a re-scan of a todo snapshot re-emits ALREADY-indexed files
-        # (snapshot granularity): drop them before appending so the
-        # sidecar never holds two bitmaps for one file
-        if done:
-            done_df = spark.createDataFrame(
-                [(x,) for x in sorted(done)], "f string"
-            )
-            new_bitmaps = new_bitmaps.join(
-                F.broadcast(done_df), on="f", how="left_anti"
-            )
-        new_bitmaps.write.mode("append").parquet(idx_dir)
-        n_new = spark.read.parquet(idx_dir).count() - len(done)
-        return {"indexed_files": int(n_new), "total_files": total}
+        hashes.groupBy("f").applyInPandas(
+            _group_bitmap, _ddl(_SIDECAR_FIELDS)
+        ).write.mode("append").parquet(idx_dir)
+        return {"indexed_files": len(missing), "total_files": len(files)}
 
     def _bloom_file_filter(self, spark, prune):
         """Planning-time file filter for ``(col, "in", v1, ...)``
         predicates backed by a key index — None when no such
-        predicate/index pair exists.  Literal values are hashed by
-        the SAME JVM xxhash64 as the build (one driver-local job over
-        a handful of rows — exact parity by construction, no Python
-        reimplementation to drift).  Unindexed files always pass."""
+        predicate/index pair exists.  The probe is one Spark job per
+        indexed column: the sidecar read with its fixed schema, the
+        literal values hashed in the same plan by the build's JVM
+        :func:`bloom.hash_pair` (cast to the column's recorded type:
+        xxhash64 of an int32 and an int64 differ), and the bitmaps
+        probed in the executors.  Unindexed files always pass, and so
+        does every file for a column the current schema lacks."""
         preds = [
             p for p in (prune or [])
             if p[1] == "in" and os.path.exists(self._key_index_paths(p[0])[0])
@@ -2466,70 +2445,52 @@ class IceliteTable:
         checks = []
         for col, _op, *vals in preds:
             meta_path, idx_dir = self._key_index_paths(col)
-            # The params meta file commits BEFORE the bitmap sidecar is
-            # built (index_keys ordering), so during the first index
-            # build — or permanently after a crash between the meta
-            # link and the bitmap append — idx_dir may be missing or
-            # hold only _temporary droppings.  A missing/empty sidecar
-            # must degrade to "all files unindexed-kept" (the same
-            # superset guarantee unindexed files already get), not
-            # throw AnalysisException from spark.read.parquet
-            # (ADVICE r6, medium).
-            if not _parquet_dir_readable(idx_dir):
+            # index_keys links the params meta before it appends the
+            # first bitmap, so a first build in flight (or one that
+            # crashed in between) leaves idx_dir missing or holding
+            # only _temporary droppings: keep every file then, as for
+            # any unindexed one, instead of reading an empty listing
+            if col not in col_types or not _parquet_dir_readable(idx_dir):
                 continue
             with open(meta_path) as f:
-                meta = json.load(f)
-            m, kk = meta["n_bits"], meta["k"]
-            # xxhash64 is TYPE-sensitive (int32 and int64 of the same
-            # value hash differently): cast the literals to the
-            # column's declared type so driver probes hash exactly
-            # like the build-side scan did
-            v = F.col("v")
-            if col in col_types:
-                v = v.cast(col_types[col])
-            hs = (
-                spark.createDataFrame([(x,) for x in vals], ["v"])
-                .select(
-                    F.xxhash64(v).alias("h1"),
-                    F.xxhash64(v, F.lit(1)).alias("h2"),
-                )
-                .collect()
+                kk = json.load(f)["k"]
+            pairs = [
+                bloom.hash_pair(F.lit(v).cast(col_types[col])) for v in vals
+            ]
+            probe = _read_files(spark, [idx_dir], _SIDECAR_FIELDS).select(
+                "f",
+                "bm",
+                F.array(*(h1 for h1, _ in pairs)).alias("h1"),
+                F.array(*(h2 for _, h2 in pairs)).alias("h2"),
             )
-            pairs = [(int(r["h1"]), int(r["h2"])) for r in hs]
 
             # Probe the bitmaps IN THE EXECUTORS and collect only one
             # boolean per file: collecting the sidecar itself would
             # pull O(n_files × bitmap_bytes) to the driver on every
             # point-lookup read (1.6 GB at 100k files × 16 KB) — the
-            # bitmaps never need to leave the cluster.  Same probe
-            # function as before (_bloom_might_contain, cloudpickled
-            # into the closure) so build/probe math cannot drift.
-            def _might_batch(it, _m=m, _kk=kk, _pairs=tuple(pairs)):
+            # bitmaps never need to leave the cluster.
+            def _might_batch(it, _kk=kk):
                 import pandas as pd
 
                 for pdf in it:
                     might = [
-                        any(
-                            _bloom_might_contain(bytes(bm), _m, _kk, h1, h2)
-                            for h1, h2 in _pairs
-                        )
-                        for bm in pdf["bm"]
+                        bool(bloom.might_contain(bm, h1, h2, _kk).any())
+                        for bm, h1, h2 in zip(pdf["bm"], pdf["h1"], pdf["h2"])
                     ]
                     yield pd.DataFrame({"f": pdf["f"], "might": might})
 
-            flags = {
+            checks.append({
                 r["f"]: r["might"]
-                for r in spark.read.parquet(idx_dir)
-                .mapInPandas(_might_batch, "f string, might boolean")
-                .collect()
-            }
-            checks.append(flags)
+                for r in probe.mapInPandas(
+                    _might_batch, "f string, might boolean"
+                ).collect()
+            })
 
         if not checks:
             return None  # every candidate index was mid-build/crashed
 
         def keep(path: str) -> bool:
-            suffix = "/".join(os.path.normpath(path).split(os.sep)[-3:])
+            suffix = _index_file_key(path)
             for flags in checks:
                 might = flags.get(suffix)
                 if might is None:

@@ -373,11 +373,12 @@ def dedup_icelite_batch_writer(
     """
     import numpy as np
 
+    from ..bloom import round_bits
     from ..operators import dedup as dedup_ops
     from ..plans.icelite import IceliteTable
 
     inner = icelite_batch_writer(table_path, n_buckets)
-    m = (int(n_bits) + 7) & ~7
+    m = round_bits(n_bits)
     state: dict = {"bitmap": None, "tip": None}
 
     def _fold_new_snapshots(spark, table) -> None:

@@ -782,6 +782,43 @@ def test_key_index_string_column(spark, tmp_path):
     assert miss.filter(F.col("url") == "https://ex.com/p/999").count() == 0
 
 
+def test_key_index_probe_and_noop_refresh_run_one_spark_job(spark, tmp_path):
+    """The sidecar is read with its fixed schema (no footer-inference
+    job) and the probe keys are hashed inside the probe plan (no
+    separate hash job): a pruned read starts exactly one Spark job
+    before its action, the probe, and a refresh with nothing new to
+    index runs one, the read of the indexed file names."""
+    import uuid
+
+    t = IceliteTable(str(tmp_path / "t"))
+    t.commit_append(_df(spark, 0, 200, n_buckets=8))
+    t.index_keys(spark, col="doc_id")
+    sc = spark.sparkContext
+
+    def jobs_of(run):
+        group = f"key-index-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "key index jobs")
+        try:
+            out = run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    pruned, n_read = jobs_of(
+        lambda: t.read(spark, prune=[("doc_id", "in", 3, 7)])
+    )
+    assert n_read == 1
+    assert len(pruned.inputFiles()) <= 3
+    assert sorted(
+        r["doc_id"]
+        for r in pruned.filter(F.col("doc_id").isin(3, 7)).collect()
+    ) == [3, 7]
+    rep, n_refresh = jobs_of(lambda: t.index_keys(spark, col="doc_id"))
+    assert rep == {"indexed_files": 0, "total_files": 8}
+    assert n_refresh == 1
+
+
 def test_compact_sort_clusters_for_stats_pruning(spark, tmp_path):
     """compact(sort_within_buckets=[col]) is the Iceberg sort-order
     rewrite: before it, every file spans the whole value range and
